@@ -19,40 +19,43 @@ from wheels_in_motion_analytics_spark.registry import load_all_queries
 from wheels_in_motion_analytics_spark.session import get_session
 
 
+def warmup(spark, specs, sf_dir: str) -> None:
+    """Warm the JVM/codegen once so per-query numbers measure the plan, not
+    session startup — and the Python/Arrow worker pool, so the first
+    mapInPandas query isn't charged several seconds of worker spawn."""
+    specs["count_total"].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+    spark.createDataFrame([(1,)], "x int").mapInPandas(
+        lambda it: (pdf for pdf in it), "x int"
+    ).write.mode("overwrite").format("noop").save()
+
+
+def release_blocks(spark) -> None:
+    """Drop localCheckpoint/cache blocks left by the previous query.
+
+    Checkpoint-heavy queries leave persisted RDD blocks behind; across
+    244 queries in one JVM they accumulate into enough memory pressure
+    that late-alphabet queries measure 3-6x slower than in a fresh
+    session. Safe only between measurements that rebuild their DataFrames
+    from scratch — nothing may persist across fn() calls.
+    """
+    import gc
+
+    gc.collect()  # release py4j-held JVM refs first
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    for jrdd in list(jmap.values()):
+        jrdd.unpersist(False)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_session("wheels-bench")
     spark.sparkContext.setLogLevel("ERROR")
     specs = load_all_queries()
-
-    # Warm the JVM/codegen once so per-query numbers measure the plan, not
-    # session startup.
-    specs["count_total"].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-    # ... and the Python/Arrow worker pool, so the alphabetically-first
-    # mapInPandas query isn't charged several seconds of worker spawn.
-    spark.createDataFrame([(1,)], "x int").mapInPandas(
-        lambda it: (pdf for pdf in it), "x int"
-    ).write.mode("overwrite").format("noop").save()
-
-    def release_blocks() -> None:
-        """Drop localCheckpoint/cache blocks left by the previous query.
-
-        Checkpoint-heavy queries leave persisted RDD blocks behind; across
-        244 queries in one JVM they accumulate into enough memory pressure
-        that late-alphabet queries measure 3-6x slower than in a fresh
-        session. Safe here because every timing iteration rebuilds its
-        DataFrame from scratch — nothing persists across fn() calls.
-        """
-        import gc
-
-        gc.collect()  # release py4j-held JVM refs first
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for jrdd in list(jmap.values()):
-            jrdd.unpersist(False)
+    warmup(spark, specs, sf_dir)
 
     def measure(name: str) -> float:
-        release_blocks()
+        release_blocks(spark)
         t0 = time.perf_counter()
         specs[name].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
         return time.perf_counter() - t0

@@ -3,7 +3,8 @@ the engine-level guarantees that hold for ANY data, not just the fixtures."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+import pytest
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 import pyspark.sql.functions as F
@@ -145,6 +146,33 @@ def test_two_phase_rank_family_matches_global_window(spark, rows, parts, tiles):
     assert got_ps == want_ps
 
 
+def _check_select_ranks(spark, rows, grouped, want_ranks):
+    """select_ranks over (g, x) rows == sorted()[k-1] for every (group,
+    rank); NULL values are ignored and no non-NULL value is a ValueError."""
+    from wheels_in_motion_analytics_spark.operators.windows import select_ranks
+
+    want = {}
+    for g, v in rows:
+        if v is not None:
+            want.setdefault(g if grouped else None, []).append(v)
+    df = spark.createDataFrame(rows, "g string, x long")
+    if not want:
+        with pytest.raises(ValueError, match="empty relation"):
+            select_ranks(df, "x", want_ranks, "g" if grouped else None)
+        return
+    got = select_ranks(df, "x", want_ranks, "g" if grouped else None)
+    assert set(got) == set(want)
+    for g, vs in want.items():
+        ordered = sorted(vs)
+        vals, n = got[g]
+        assert n == len(vs)
+        assert vals == {k: ordered[k - 1] for k in want_ranks(n)}
+
+
+def _ranks_at(kfracs):
+    return lambda n: [1 + (kf * (n - 1)) // 100 for kf in kfracs]
+
+
 @given(
     vals=st.lists(
         st.integers(min_value=-(2**52), max_value=2**52), min_size=1, max_size=60
@@ -153,76 +181,50 @@ def test_two_phase_rank_family_matches_global_window(spark, rows, parts, tiles):
 )
 @settings(**SETTINGS)
 def test_global_kth_smallest_matches_sorted_index(spark, vals, kfrac):
-    """Distributed quickselect == sorted()[k-1] for any integer multiset
-    (negative values, duplicates, full 53-bit range) and any valid rank."""
-    from wheels_in_motion_analytics_spark.operators.windows import (
-        global_kth_smallest,
-    )
-
-    k = 1 + (kfrac * (len(vals) - 1)) // 100
-    df = spark.createDataFrame([(v,) for v in vals], "x long")
-    got, n = global_kth_smallest(df, "x", k)
-    assert n == len(vals)
-    assert got == sorted(vals)[k - 1]
+    """One rank over the whole relation == sorted()[k-1] for any integer
+    multiset (negative values, duplicates, full 53-bit range) and any
+    valid rank."""
+    _check_select_ranks(spark, [("A", v) for v in vals], False, _ranks_at([kfrac]))
 
 
 @given(
     vals=st.lists(
-        st.integers(min_value=-(2**52), max_value=2**52), min_size=1, max_size=60
+        st.one_of(st.integers(min_value=-(2**52), max_value=2**52), st.none()),
+        max_size=60,
     ),
     kfracs=st.lists(st.integers(min_value=0, max_value=100), min_size=1, max_size=6),
 )
+@example(vals=[], kfracs=[50])
+@example(vals=[None, None], kfracs=[0])
 @settings(**SETTINGS)
 def test_global_rank_values_matches_sorted_index(spark, vals, kfracs):
-    """Shared-round multi-rank selection == sorted()[k-1] for every target
-    at once (negative values, duplicates, full 53-bit range, coincident and
-    adjacent ranks) — the r10 generalization of global_kth_smallest."""
-    from wheels_in_motion_analytics_spark.operators.windows import (
-        global_rank_values,
-    )
-
-    ks = sorted({1 + (kf * (len(vals) - 1)) // 100 for kf in kfracs})
-    df = spark.createDataFrame([(v,) for v in vals], "x long")
-    got, n = global_rank_values(df, "x", ks)
-    ordered = sorted(vals)
-    assert n == len(vals)
-    assert got == {k: ordered[k - 1] for k in ks}
+    """Several ranks at once over the whole relation == sorted()[k-1] for
+    every target (duplicates, coincident and adjacent ranks, NULL values
+    ignored, no non-NULL value at all a ValueError)."""
+    _check_select_ranks(spark, [("A", v) for v in vals], False, _ranks_at(kfracs))
 
 
 @given(
     groups=st.dictionaries(
-        st.sampled_from(["A", "B", "C", "D"]),
+        st.sampled_from(["A", "B", "C", None]),
         st.lists(
-            st.integers(min_value=-(2**52), max_value=2**52),
-            min_size=1,
+            st.one_of(st.integers(min_value=-(2**52), max_value=2**52), st.none()),
             max_size=40,
         ),
-        min_size=1,
         max_size=4,
     ),
-    kfracs=st.lists(st.integers(min_value=0, max_value=100), min_size=1, max_size=4),
+    kfracs=st.lists(st.integers(min_value=0, max_value=100), min_size=1, max_size=6),
 )
+@example(groups={"A": [None, None]}, kfracs=[0])
+@example(groups={None: [7, None, -3], "A": [5]}, kfracs=[0, 50, 50, 100])
 @settings(**SETTINGS)
 def test_grouped_rank_values_matches_sorted_index(spark, groups, kfracs):
-    """Group-keyed shared-round selection == per-group sorted()[k-1] for
-    every (group, target) at once — the r11 group-keyed sibling of
-    global_rank_values (broadcast-relation ranges, no expression forest)."""
-    from wheels_in_motion_analytics_spark.operators.windows import (
-        grouped_rank_values,
-    )
-
+    """Group-keyed selection == per-group sorted()[k-1] for every (group,
+    rank) at once: single-value groups, a NULL group key (its own group,
+    as GROUP BY), NULL values (ignored, as percentile()) and the empty
+    relation."""
     rows = [(g, v) for g, vs in groups.items() for v in vs]
-    df = spark.createDataFrame(rows, "g string, x long")
-    got = grouped_rank_values(
-        df, "g", "x", lambda n: sorted({1 + (kf * (n - 1)) // 100 for kf in kfracs})
-    )
-    assert set(got) == set(groups)
-    for g, vs in groups.items():
-        ordered = sorted(vs)
-        vals, n = got[g]
-        assert n == len(vs)
-        want = sorted({1 + (kf * (n - 1)) // 100 for kf in kfracs})
-        assert vals == {k: ordered[k - 1] for k in want}
+    _check_select_ranks(spark, rows, True, _ranks_at(kfracs))
 
 
 @given(

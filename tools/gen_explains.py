@@ -98,7 +98,7 @@ PICKS += [
     ("gbdt_two_round_regression", "two boosting rounds: bounded-domain (n,Σr) aggs + broadcast residual update, no row-scale shuffle"),
     ("graph_node_jaccard_similarity", "mirrored adjacency wedge join for candidates; degree attach joins; heap top-20"),
     ("sprt_sequential_test", "frozen nano-ln literals; two-phase prefix-sum LLR walk; min(struct) first crossing"),
-    ("conformal_interval_calibration", "quickselect histogram rounds for the exact quantile + one coverage agg over the checkpointed residuals"),
+    ("conformal_interval_calibration", "radix-selection histogram rounds for the exact quantile + one coverage agg over the checkpointed residuals"),
     ("ann_recall_at_k_eval", "blocked exact matmul cells vs bucketed LSH, one (query,neighbor) join + single agg"),
     ("feature_store_training_set", "PRECEDING-only frames: ONE customer Exchange serves lifetime + 90d-range + lag features"),
     ("binseg_two_level_changepoints", "one prefix relation; every segment statistic is arithmetic over it, three max(struct) picks"),

@@ -45,6 +45,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F
 
+from bench import release_blocks
 from wheels_in_motion_analytics_spark.session import get_session
 from wheels_in_motion_analytics_spark.sources import cdc
 
@@ -72,19 +73,6 @@ def build_orders(spark, factor: int) -> str:
             .parquet(out)
         )
     return out_dir
-
-
-def release_blocks(spark) -> None:
-    """Drop localCheckpoint blocks left by prior phases (bench.py's rule:
-    accumulated checkpoint blocks create memory pressure that inflates
-    later measurements — the first probe run of this tool measured 76s for
-    a 7s merge exactly because of this)."""
-    import gc
-
-    gc.collect()
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for jrdd in list(jmap.values()):
-        jrdd.unpersist(False)
 
 
 def materialize_updates(spark, sf_dir: str) -> str:
@@ -131,6 +119,8 @@ def probe_partitioned(spark, sf_dir: str) -> dict:
         cdc._ledger_path(tbl)
     )
 
+    # the seed's checkpoint blocks otherwise inflate the merge timing (a
+    # 7 s merge measured 76 s in this probe's first run)
     release_blocks(spark)
     before = partition_sizes(data_path)
     updates = spark.read.parquet(materialize_updates(spark, sf_dir))

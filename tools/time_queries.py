@@ -15,6 +15,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import release_blocks, warmup
 from wheels_in_motion_analytics_spark.registry import load_all_queries
 from wheels_in_motion_analytics_spark.session import get_session
 
@@ -31,19 +32,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     specs = load_all_queries()
 
-    # bench.py's warmup: JVM/codegen + Python worker pool
-    specs["count_total"].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-    spark.createDataFrame([(1,)], "x int").mapInPandas(
-        lambda it: (pdf for pdf in it), "x int"
-    ).write.mode("overwrite").format("noop").save()
-
-    def release_blocks() -> None:
-        import gc
-
-        gc.collect()
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for jrdd in list(jmap.values()):
-            jrdd.unpersist(False)
+    warmup(spark, specs, sf_dir)
 
     results: dict[str, float] = {}
     for name in names:
@@ -61,7 +50,7 @@ def main() -> int:
                 fh.write(plan)
         best = None
         for _ in range(n_iter):
-            release_blocks()
+            release_blocks(spark)
             spark.sparkContext.setJobDescription(f"time:{name}")
             t0 = time.perf_counter()
             specs[name].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()

@@ -359,7 +359,7 @@ WINSOR_HI = 0.99
     "outlier-robust preprocessing step for price-like features. Bounds "
     "rounded in isolation; comparisons happen on the rounded bounds on "
     "both engines. r11 rewrite: the bounds come from per-group "
-    "shared-round histogram selection (grouped_percentile_doubles — "
+    "radix selection (grouped_percentile_doubles over select_ranks — "
     "bit-identical to the former percentile() aggregate, pinned by "
     "tests/test_operators.py) and attach as literal CASE expressions, so "
     "the percentile counts-map state (partial maps growing with distinct "
@@ -401,13 +401,10 @@ def winsorize_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per-group bound as a literal CASE over the bounded flag domain;
         # round() stays a Spark expression (engine rounding semantics)
         expr = None
-        for g, vals in sorted(pct.items()):
+        for g, vals in pct.items():
             branch = F.round(F.lit(vals[idx]), 4)
-            expr = (
-                F.when(F.col("l_returnflag") == g, branch)
-                if expr is None
-                else expr.when(F.col("l_returnflag") == g, branch)
-            )
+            hit = F.col("l_returnflag").eqNullSafe(g)
+            expr = F.when(hit, branch) if expr is None else expr.when(hit, branch)
         return expr
 
     withb = li.select(
@@ -1661,7 +1658,7 @@ def sprt_sequential_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     category="stats",
     doc="Wald–Wolfowitz runs test on daily revenue vs its median: days "
     "classify above/below the EXACT lower median (selected by the "
-    "distributed quickselect — ties with the median drop, the standard "
+    "distributed radix selection, select_ranks — ties with the median drop, the standard "
     "treatment), the run count comes from one lag pass over the bounded "
     "day grain, and the normal-approximation verdict |z| > 1.96 is "
     "decided ENTIRELY in integers by cross-multiplication: "
@@ -1710,7 +1707,7 @@ FROM agg
 def runs_test_randomness(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    from wheels_in_motion_analytics_spark.operators.windows import global_kth_smallest
+    from wheels_in_motion_analytics_spark.operators.windows import select_ranks
 
     c = F.col
     d = (
@@ -1721,9 +1718,10 @@ def runs_test_randomness(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
             ).alias("cents")
         )
-        .localCheckpoint()  # quickselect passes + the runs pass share it
+        .localCheckpoint()  # selection passes + the runs pass share it
     )
-    m, _n = global_kth_smallest(d, "cents", lambda n: (n + 1) // 2)
+    vals, _n = select_ranks(d, "cents", lambda n: [(n + 1) // 2])[None]
+    [m] = vals.values()
     s = d.where(c("cents") != m).select(
         "day", (c("cents") > m).cast("int").alias("above")
     )

@@ -310,16 +310,17 @@ def grouping_sets_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "percentile_exact",
     category="aggregates",
     doc="Exact continuous percentiles per group (oracle: quantile_cont). "
-    "r11 rewrite: per-group shared-round histogram selection "
-    "(grouped_rank_values) + Spark's own interpolation arithmetic "
+    "r11 rewrite: per-group radix selection (select_ranks via "
+    "grouped_percentile_doubles) + Spark's own interpolation arithmetic "
     "reproduced op-for-op on the selected straddling values — "
     "bit-identical to the former percentile() aggregate (pinned by "
     "tests/test_operators.py) WITHOUT its per-group counts-map state, "
     "whose partial maps grow with distinct values per group (a memory "
     "hazard at 100 TB) and whose final merge serializes onto one task "
     "per group (3 groups ⇒ 3-way parallelism ceiling — the r10 driver "
-    "measured 0.54 low/high-core anti-scaling). Selection is 3 bounded "
-    "scan jobs; the final round() stays a Spark expression so rounding "
+    "measured 0.54 low/high-core anti-scaling). Selection is one count "
+    "job per round over one checkpoint; the final round() stays a Spark "
+    "expression so rounding "
     "semantics remain the engine's own.",
     oracle="""
 SELECT l_returnflag,
@@ -336,7 +337,7 @@ def percentile_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     pct = grouped_percentile_doubles(
         table(spark, sf_dir, "lineitem"), "l_returnflag", "l_extendedprice", [0.5, 0.9]
     )
-    rows = [(g, v[0], v[1]) for g, v in sorted(pct.items())]
+    rows = [(g, v[0], v[1]) for g, v in pct.items()]
     return spark.createDataFrame(
         rows, "l_returnflag string, p50_raw double, p90_raw double"
     ).select(

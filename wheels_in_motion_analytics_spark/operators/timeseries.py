@@ -1242,9 +1242,9 @@ _REGISTRY["acf_daily_revenue"].oracle = _acf_oracle()
     "day-grain series. The pair relation is day-cardinality squared — "
     "BOUNDED by the calendar (~2.9M pairs for the 7-year window at ANY "
     "table scale), generated by a crossJoin of the bounded day relation "
-    "with itself; the median VALUE comes from distributed quickselect "
-    "(operators/windows.py:global_kth_smallest — histogram narrowing, "
-    "<=4 counting passes, no sort and no full rank assignment; ~4x "
+    "with itself; the median VALUE comes from distributed radix selection "
+    "(operators/windows.py:select_ranks — 14 bits of range per counting "
+    "pass, no sort and no full rank assignment; ~4x "
     "faster here than the two-phase global rank, which pays range "
     "sampling + checkpoint for ranks the median throws away). Emits the "
     "lower-median slope plus the pair count.",
@@ -1273,7 +1273,7 @@ GROUP BY n.n_pairs
 """,
 )
 def theil_sen_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from wheels_in_motion_analytics_spark.operators.windows import global_kth_smallest
+    from wheels_in_motion_analytics_spark.operators.windows import select_ranks
 
     d = (
         table(spark, sf_dir, "orders")
@@ -1299,9 +1299,8 @@ def theil_sen_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("slope_scaled"),
         )
     )
-    median, n_pairs = global_kth_smallest(
-        p, "slope_scaled", lambda n: (n + 1) // 2
-    )
+    vals, n_pairs = select_ranks(p, "slope_scaled", lambda n: [(n + 1) // 2])[None]
+    [median] = vals.values()
     # scalars are exact products of distributed jobs; surface them as the
     # 1-row result relation
     return spark.createDataFrame(
@@ -2192,7 +2191,7 @@ NV_CO = 1  # overage cost per unit (holding/salvage loss)
     f"quantity): critical ratio cu/(cu+co) = {NV_CU}/{NV_CU + NV_CO} "
     "-> stock q* = smallest q with F(q) >= 0.8, i.e. the "
     "ceil(0.8 n)-th smallest daily demand — selected by the "
-    "DISTRIBUTED QUICKSELECT (operators/windows.py:global_kth_smallest, "
+    "DISTRIBUTED RADIX SELECTION (operators/windows.py:select_ranks, "
     "histogram narrowing, never a global sort). Emits exact integer "
     "under/over unit sums, the empirical cost at q*, and an AUDITED "
     "OPTIMALITY verdict: cost(q*-1) >= cost(q*) <= cost(q*+1) computed "
@@ -2235,16 +2234,17 @@ FROM n CROSS JOIN q CROSS JOIN costs c
 """,
 )
 def newsvendor_stock_level(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from wheels_in_motion_analytics_spark.operators.windows import global_kth_smallest
+    from wheels_in_motion_analytics_spark.operators.windows import select_ranks
 
     c = F.col
     d = (
         table(spark, sf_dir, "lineitem")
         .groupBy(c("l_shipdate").cast("date").alias("day"))
         .agg(F.sum(c("l_quantity").cast("bigint")).alias("dem"))
-        .localCheckpoint()  # quickselect passes + the cost pass share it
+        .localCheckpoint()  # selection passes + the cost pass share it
     )
-    stock, n_days = global_kth_smallest(d, "dem", lambda n: -(-4 * n // 5))
+    vals, n_days = select_ranks(d, "dem", lambda n: [-(-4 * n // 5)])[None]
+    [stock] = vals.values()
     q = F.lit(stock)
     costs = d.agg(
         F.sum(F.when(c("dem") > q, c("dem") - q).otherwise(0)).alias("under_u"),
@@ -2466,7 +2466,7 @@ def hurst_rescaled_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Historical-simulation VaR(5%) and CVaR on day-over-day revenue "
     "changes: deltas from one calendar-lag pass over the bounded day "
     "grain, VaR = the ceil(0.05 n)-th smallest delta selected by the "
-    "DISTRIBUTED QUICKSELECT (integer k = (n+19) DIV 20 — no float "
+    "DISTRIBUTED RADIX SELECTION (select_ranks; integer k = (n+19) DIV 20 — no float "
     "quantile index, the newsvendor lesson), CVaR = exact mean of the "
     "tail at-or-below VaR as sign-split half-up milli-cents. All "
     "integers end to end; the risk-desk readout built on the same "
@@ -2502,7 +2502,7 @@ FROM n CROSS JOIN v CROSS JOIN tail
 """,
 )
 def var_cvar_revenue_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from wheels_in_motion_analytics_spark.operators.windows import global_kth_smallest
+    from wheels_in_motion_analytics_spark.operators.windows import select_ranks
 
     c = F.col
     d = (
@@ -2520,11 +2520,10 @@ def var_cvar_revenue_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
             (c("cents") - F.lag("cents").over(Window.orderBy("day"))).alias("delta")
         )
         .where(c("delta").isNotNull())
-        .localCheckpoint()  # quickselect passes + the tail pass share it
+        .localCheckpoint()  # selection passes + the tail pass share it
     )
-    var_cents, n_changes = global_kth_smallest(
-        ch, "delta", lambda n: (n + 19) // 20
-    )
+    vals, n_changes = select_ranks(ch, "delta", lambda n: [(n + 19) // 20])[None]
+    [var_cents] = vals.values()
     tail = ch.where(c("delta") <= var_cents).agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("tn"),
         F.sum("delta").cast("decimal(38,0)").alias("ts"),

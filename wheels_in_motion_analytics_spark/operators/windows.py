@@ -467,18 +467,18 @@ def global_prefix_sums(
     category="windows",
     doc="EXACT corpus-wide p25/p50/p75 of l_extendedprice by distributed "
     "order-statistic selection: prices quantize to integer cents and each "
-    "quartile's two straddling ranks are selected by shared-round histogram "
-    "narrowing (global_rank_values — 16384-way integer histograms, all six "
-    "target ranks narrowed in the SAME scan each round), with quantile_cont "
+    "quartile's two straddling ranks are selected by radix narrowing "
+    "(select_ranks — 14 bits of value range per round, all six target "
+    "ranks narrowed in the SAME scan each round), with quantile_cont "
     "interpolation done in EXACT integer arithmetic (result × 4 is an "
     "integer because the interpolation fractions are quarters). No "
     "single-task sort, no float accumulation — and, unlike a rank-"
     "everything two-phase sort, NO shuffle of the data at all: selection "
-    "needs counts, not ranks, so the only exchange is the ≤65537-row "
-    "histogram merge. r10 rewrite from the two-phase global rank (which "
+    "needs counts, not ranks, so the only exchange is the ≤16384-row-per-"
+    "bucket histogram merge. r10 rewrite from the two-phase global rank (which "
     "range-shuffled + sorted all rows, joined offsets, then threw away all "
     "but 6 ranks): 2.9–3.5 s → ~0.9 s at sf0.1, and the 100 TB posture "
-    "strictly improves (two column-scan histogram passes replace a "
+    "strictly improves (two checkpoint-scan histogram passes replace a "
     "full-table range shuffle + sort). The 100 TB exact-quantile answer "
     "when a sketch's error bound is not acceptable.",
     oracle="""
@@ -513,27 +513,9 @@ def global_quartiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents")
     )
 
-    def quartile_ranks(n: int) -> list[int]:
-        want = []
-        for k in (1, 2, 3):
-            m = k * (n - 1)
-            lo = m // 4 + 1
-            want += [lo, lo + (1 if m % 4 else 0)]
-        return want
-
-    # plain column scan per histogram round (2 rounds at sf0.1 cents
-    # magnitudes) — cheaper than a checkpoint job for a source-backed scan
-    vals, n = global_rank_values(li, "cents", quartile_ranks, materialize=False)
-    out = [n]
-    for k in (1, 2, 3):
-        m = k * (n - 1)
-        lo = m // 4 + 1
-        r = m % 4
-        hi = lo + (1 if r else 0)
-        out.append(vals[lo] * (4 - r) + vals[hi] * r)
+    [row] = _quartiles_x4(li, "cents").values()
     return spark.createDataFrame(
-        [tuple(out)],
-        "n long, p25_cents_x4 long, p50_cents_x4 long, p75_cents_x4 long",
+        [row], "n long, p25_cents_x4 long, p50_cents_x4 long, p75_cents_x4 long"
     )
 
 
@@ -646,14 +628,16 @@ def skyline_pareto_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="EXACT per-group p25/p50/p75 of order value (integer cents, "
     "results x4 so quarter-interpolation stays integer — same arithmetic "
     "as global_quartiles_exact): each group's six straddling ranks are "
-    "selected by shared-round histogram narrowing (grouped_rank_values — "
-    "ALL groups and ALL targets histogrammed in the SAME scan each "
-    "round), quarter-interpolated in exact integer arithmetic. SCALE "
+    "selected by radix narrowing (select_ranks — ALL groups and ALL "
+    "targets histogrammed in the SAME scan each round on one packed "
+    "(group, offset) key), quarter-interpolated in exact integer "
+    "arithmetic. SCALE "
     "SHAPE (r11 rewrite from a group-partitioned window rank): the old "
     "shape shuffled and sorted every order row with parallelism capped "
     "at the group count (5 priorities ⇒ 5 sort tasks regardless of "
-    "cores); selection is 3 bounded column-scan jobs with no shuffle of "
-    "the data at all — the per-GROUP complement of the driver-assembled "
+    "cores); selection is one count job per round over one checkpoint, "
+    "with no shuffle of the data at all — the per-GROUP complement of the "
+    "driver-assembled "
     "global quartiles. No floats anywhere.",
     oracle="""
 WITH c AS (
@@ -685,25 +669,7 @@ def group_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents"),
     )
 
-    def want(n: int) -> list[int]:
-        ranks = []
-        for k in (1, 2, 3):
-            m = k * (n - 1)
-            lo = m // 4 + 1
-            ranks += [lo, lo + (1 if m % 4 else 0)]
-        return ranks
-
-    sel = grouped_rank_values(o, "grp", "cents", want)
-    rows = []
-    for g, (vals, n) in sorted(sel.items()):
-        row = [g, n]
-        for k in (1, 2, 3):
-            m = k * (n - 1)
-            lo = m // 4 + 1
-            r = m % 4
-            hi = lo + (1 if r else 0)
-            row.append(vals[lo] * (4 - r) + vals[hi] * r)
-        rows.append(tuple(row))
+    rows = [(g, *q) for g, q in _quartiles_x4(o, "cents", "grp").items()]
     return spark.createDataFrame(
         rows,
         "grp string, n long, p25_cents_x4 long, p50_cents_x4 long, "
@@ -711,232 +677,133 @@ def group_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Histogram fan-out per narrowing round. 16384 keeps the driver collect to
-# <= 16385 rows/round (a 65536-way histogram collect measured 0.3-0.6s via
-# py4j at sf0.1 — the dominant cost of a round) while still resolving any
-# 64-bit range in <= ceil(64/14)+1 = 6 rounds and any cents-magnitude range
-# (<= ~2.7e8 after one round) in 2.
-_HIST_BUCKETS = 16384
-
-def global_rank_values(
-    df: DataFrame,
-    col: str,
-    ranks,
-    materialize: bool = True,
-) -> tuple[dict[int, int], int]:
-    """EXACT order-statistic selection of SEVERAL ranks of an integral
-    column in shared histogram rounds — the multi-rank sibling of
-    :func:`global_kth_smallest` (same narrowing idea, one job per round for
-    ALL targets instead of one quickselect per target).
-
-    ``ranks`` is a list of 1-based target ranks or a callable ``n ->
-    list[int]`` resolved against the relation size. Returns
-    ``({rank: value}, n_rows)``.
-
-    Why one job per round stays possible with many targets: every target
-    starts from the same [min, max] range, and each round a target's range
-    narrows to ONE bucket of its previous range — so live ranges are always
-    pairwise identical-or-disjoint, every row belongs to at most one range,
-    and a single ``CASE``-keyed ``groupBy (range_id, bucket)`` histograms
-    all of them in one partial-aggregable pass. Driver state is bounded by
-    65537 x n_targets rows per round, never by data. No sort, NO shuffle of
-    the data anywhere (the only exchange is the tiny histogram merge) —
-    compare the TeraSort-shaped two-phase rank, which range-shuffles the
-    entire relation to produce ranks that a selection query throws away.
-    """
-    src = df.select(F.col(col).alias("v"))
-    if materialize:
-        # lazy: the min/max job below materializes the blocks (one job
-        # saved per use — the same fuse as the two-phase rank family)
-        src = src.localCheckpoint(eager=False)
-    mm = src.agg(F.min("v").alias("mn"), F.max("v").alias("mx")).collect()[0]
-    if mm.mn is None:
-        raise ValueError("rank selection over an empty relation")
-    # resolve n + target list from the first full-range histogram
-    n_total: int | None = None
-    # live targets: rank -> (lo, hi, kk) with kk the rank inside [lo, hi]
-    live: dict[int, tuple[int, int, int]] = {}
-    resolved: dict[int, int] = {}
-    first_lo, first_hi = mm.mn, mm.mx
-    for _ in range(8):
-        if n_total is not None and not live:
-            break
-        if n_total is None:
-            ranges = [(first_lo, first_hi)]
-        else:
-            # identical-or-disjoint by construction; histogram each once
-            ranges = sorted({(lo, hi) for lo, hi, _ in live.values()})
-        widths = [(hi - lo) // _HIST_BUCKETS + 1 for lo, hi in ranges]
-        bucket = None
-        for i, ((lo, hi), width) in enumerate(zip(ranges, widths)):
-            # integer DIV, not float-divide-then-cast (NOTES.md round-3)
-            b = F.when(
-                (F.col("v") >= lo) & (F.col("v") <= hi),
-                F.expr(f"CAST((v - {lo}) DIV {width} AS BIGINT)"),
-            )
-            bucket = b if bucket is None else F.coalesce(bucket, b)
-            if i == 0:
-                rid = F.when((F.col("v") >= lo) & (F.col("v") <= hi), i)
-            else:
-                rid = rid.when((F.col("v") >= lo) & (F.col("v") <= hi), i)
-        hist = (
-            src.groupBy(rid.alias("r"), bucket.alias("b"))
-            .count()
-            .where(F.col("r").isNotNull())
-            .collect()
-        )
-        per_range: dict[int, list] = {}
-        for row in hist:
-            per_range.setdefault(row["r"], []).append(row)
-        if n_total is None:
-            n_total = sum(r["count"] for r in per_range.get(0, []))
-            want = sorted(set(ranks(n_total) if callable(ranks) else ranks))
-            for k in want:
-                if not 1 <= k <= n_total:
-                    raise ValueError(f"rank {k} outside 1..{n_total}")
-            live = {k: (first_lo, first_hi, k) for k in want}
-        nxt: dict[int, tuple[int, int, int]] = {}
-        for k, (lo, hi, kk) in live.items():
-            if lo == hi:
-                resolved[k] = lo
-                continue
-            ridx = ranges.index((lo, hi))
-            width = widths[ridx]
-            acc, g = 0, None
-            for row in sorted(per_range.get(ridx, []), key=lambda r: r["b"]):
-                if acc + row["count"] >= kk:
-                    g = row["b"]
-                    kk -= acc
-                    break
-                acc += row["count"]
-            assert g is not None
-            if width == 1:
-                resolved[k] = lo + g
-            else:
-                nlo = lo + g * width
-                nxt[k] = (nlo, min(hi, nlo + width - 1), kk)
-        live = nxt
-    if live:
-        raise AssertionError("multi-rank selection failed to converge in 8 rounds")
-    return resolved, n_total
+# Bits of value range resolved per narrowing round: each live bucket splits
+# into <= 2^14 sub-buckets, so a round's driver collect stays <= 16384 rows
+# per live bucket (a 65536-way collect measured 0.3-0.6 s via py4j at sf0.1,
+# the dominant cost of a round) and a 63-bit span resolves in 5 rounds.
+_ROUND_BITS = 14
 
 
-def grouped_rank_values(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    ranks,
-    buckets: int = 4096,
+def select_ranks(
+    df: DataFrame, value_col: str, ranks, group_col: str | None = None
 ) -> dict:
-    """EXACT per-GROUP order-statistic selection of an integral column in
-    shared histogram rounds — the group-keyed sibling of
-    :func:`global_rank_values` for bounded group domains (return flags,
-    nations, priorities). ``ranks`` is a callable ``n -> list[int]``
-    resolved against each group's size. Returns
-    ``{group: ({rank: value}, n_rows)}``.
+    """EXACT order-statistic selection of an integral column: for every
+    group, the values at the 1-based ranks ``ranks(n)`` (``n`` = the
+    group's row count). Returns ``{group: ({rank: value}, n)}``; without
+    ``group_col`` the whole relation is the single group ``None``.
 
-    One job per round for ALL groups and ALL targets: within a group the
-    live ranges are identical-or-disjoint (each target's range narrows to
-    one bucket of its previous range), and across groups the group key
-    separates them — so one ``groupBy (range_id, bucket)`` histograms
-    everything at once. The live ranges attach as a TINY BROADCAST
-    RELATION (equi-join on the group key + range filter), NOT as an
-    inline CASE chain: a when-chain over ``groups × targets`` ranges
-    blows up analysis/codegen super-linearly (measured 1.1 s → 22 s →
-    minutes per round at 23–28 ranges on 15k rows — the round-4 lesson
-    that literal model state belongs in a broadcast relation, not an
-    expression forest). Driver state per round is bounded by ``buckets ×
-    live_ranges`` (live_ranges ≤ groups × targets), never by data.
-    Replaces the per-group counts-map state of Spark's ``percentile()``
-    aggregate (whose partial maps grow with distinct values per group — a
-    memory hazard at scale) with fixed-size histograms; no sort, no
-    shuffle of the data anywhere.
+    Semantics follow ``GROUP BY`` + ``percentile()``: NULL values are
+    ignored, a NULL group key is a group of its own, and a group with no
+    non-NULL value does not exist. An input with no non-NULL value at all
+    raises ``ValueError``, as does a rank outside ``1..n``.
+
+    Radix narrowing over ONE key: each group's values become offsets
+    ``v - min_g`` packed above the group id, ``u = gid << B | (v - min_g)``
+    with ``B`` the bit length of the widest group span. Round r counts rows
+    by ``u >> s_r`` (``s`` starts at ``B`` and drops by 14 bits a round),
+    keeping only rows whose previous-round prefix ``u >> s_{r-1}`` holds a
+    live target — one ``isin`` over longs. Buckets nest exactly across
+    rounds and never straddle groups, so each target descends into one
+    child bucket per round and ``ceil(B / 14)`` rounds (<= 5) resolve every
+    group and rank at once: one filtered, partial-aggregable count job per
+    round over one lazy ``localCheckpoint`` of the ``(g, v)`` projection.
+    No sort, no shuffle of the data; driver state per round is bounded by
+    live buckets x 2^14, never by data. Raises ``ValueError`` when the
+    group count times ``2^B`` exceeds the 64-bit key.
     """
     src = (
-        df.select(F.col(group_col).alias("g"), F.col(value_col).alias("v"))
-        .where(F.col("v").isNotNull())  # percentile() semantics: nulls ignored
-        # lazy: the min/max/count job below materializes the blocks
+        df.select(
+            F.col(value_col).cast("long").alias("v"),
+            *([F.col(group_col).alias("g")] if group_col is not None else []),
+        )
+        .where(F.col("v").isNotNull())
+        # lazy: the stats job below materializes the blocks
         .localCheckpoint(eager=False)
     )
-    base = src.groupBy("g").agg(
-        F.min("v").alias("mn"), F.max("v").alias("mx"), F.count(F.lit(1)).alias("n")
-    ).collect()
-    live: dict[tuple, tuple[int, int, int]] = {}  # (g, rank) -> (lo, hi, kk)
-    resolved: dict = {}
-    for row in base:
-        g, n = row["g"], row["n"]
-        resolved[g] = ({}, n)
-        for k in sorted(set(ranks(n))):
-            if not 1 <= k <= n:
-                raise ValueError(f"rank {k} outside 1..{n} for group {g!r}")
-            live[(g, k)] = (row["mn"], row["mx"], k)
-    spark = df.sparkSession
-    import pyspark.sql.types as T
-
-    g_type = src.schema["g"].dataType
-    rng_schema = T.StructType(
-        [
-            T.StructField("__r", T.IntegerType()),
-            T.StructField("__g", g_type),
-            T.StructField("__lo", T.LongType()),
-            T.StructField("__hi", T.LongType()),
-            T.StructField("__w", T.LongType()),
-        ]
+    # without groups the key is a literal NULL, so the per-row group-id
+    # arithmetic below constant-folds away
+    g = F.col("g") if group_col is not None else F.lit(None).cast("string")
+    stats = {
+        r["g"]: r
+        for r in src.groupBy(g.alias("g"))
+        .agg(F.min("v").alias("mn"), F.max("v").alias("mx"), F.count("v").alias("n"))
+        .collect()
+    }
+    if not stats:
+        raise ValueError("rank selection over an empty relation")
+    # group ids: the sorted non-NULL keys, then the NULL group (whose
+    # array_position is NULL)
+    keys = sorted(k for k in stats if k is not None)
+    slots = keys + ([None] if None in stats else [])
+    bits = max((r["mx"] - r["mn"]).bit_length() for r in stats.values())
+    if len(slots) << bits > 1 << 63:
+        raise ValueError("value span too wide for 64-bit rank selection")
+    mins = [stats[k]["mn"] for k in slots]
+    gid = F.coalesce(
+        F.array_position(F.array(*map(F.lit, keys)), g) - 1,
+        F.lit(len(keys)).cast("long"),
     )
-    for _ in range(8):
-        if not live:
-            break
-        ranges = sorted({(g, lo, hi) for (g, _), (lo, hi, _) in live.items()})
-        widths = [(hi - lo) // buckets + 1 for _, lo, hi in ranges]
-        rng = spark.createDataFrame(
-            [
-                (i, g, lo, hi, width)
-                for i, ((g, lo, hi), width) in enumerate(zip(ranges, widths))
-            ],
-            rng_schema,
-        )
+    u = F.col("v") - F.array(*map(F.lit, mins))[gid] + F.shiftleft(gid, bits)
+
+    # target (gid, rank) -> (its bucket key at the current shift, its rank
+    # inside that bucket); at shift B a group's only bucket is its gid
+    live: dict[tuple[int, int], tuple[int, int]] = {}
+    for i, k in enumerate(slots):
+        n = stats[k]["n"]
+        for rank in sorted(set(ranks(n))):
+            if not 1 <= rank <= n:
+                raise ValueError(f"rank {rank} outside 1..{n} for group {k!r}")
+            live[(i, rank)] = (i, rank)
+    shift = bits
+    while shift > 0:
+        nxt = max(0, shift - _ROUND_BITS)
         hist = (
-            src.join(
-                F.broadcast(rng),
-                (F.col("g") == F.col("__g"))
-                & (F.col("v") >= F.col("__lo"))
-                & (F.col("v") <= F.col("__hi")),
+            src.where(
+                F.shiftright(u, shift).isin(sorted({b for b, _ in live.values()}))
             )
-            # integer DIV, not float-divide-then-cast (NOTES.md round-3)
-            .groupBy(
-                F.col("__r").alias("r"),
-                F.expr("CAST((v - __lo) DIV __w AS BIGINT)").alias("b"),
-            )
+            .groupBy(F.shiftright(u, nxt).alias("b"))
             .count()
             .collect()
         )
-        per_range: dict[int, list] = {}
-        for row in hist:
-            per_range.setdefault(row["r"], []).append(row)
-        nxt: dict[tuple, tuple[int, int, int]] = {}
-        for (g, k), (lo, hi, kk) in live.items():
-            if lo == hi:
-                resolved[g][0][k] = lo
-                continue
-            ridx = ranges.index((g, lo, hi))
-            width = widths[ridx]
-            acc, picked = 0, None
-            for row in sorted(per_range.get(ridx, []), key=lambda r: r["b"]):
-                if acc + row["count"] >= kk:
-                    picked = row["b"]
-                    kk -= acc
+        children: dict[int, list] = {}
+        for row in sorted(hist, key=lambda r: r["b"]):
+            children.setdefault(row["b"] >> (shift - nxt), []).append(row)
+        for target, (bucket, kk) in live.items():
+            for row in children[bucket]:
+                if kk <= row["count"]:
+                    live[target] = (row["b"], kk)
                     break
-                acc += row["count"]
-            assert picked is not None
-            if width == 1:
-                resolved[g][0][k] = lo + picked
-            else:
-                nlo = lo + picked * width
-                nxt[(g, k)] = (nlo, min(hi, nlo + width - 1), kk)
-        live = nxt
-    if live:
-        raise AssertionError("grouped rank selection failed to converge in 8 rounds")
-    return resolved
+                kk -= row["count"]
+        shift = nxt
+    # at shift 0 a bucket key is u itself
+    out = {k: ({}, stats[k]["n"]) for k in slots}
+    for (i, rank), (key, _) in live.items():
+        out[slots[i]][0][rank] = key - (i << bits) + mins[i]
+    return out
+
+
+def _quartiles_x4(df: DataFrame, value_col: str, group_col: str | None = None) -> dict:
+    """``{group: (n, p25 x4, p50 x4, p75 x4)}``: exact quantile_cont
+    quartiles of an integral column. Each quartile interpolates its two
+    straddling ranks by a quarter fraction, so 4x the result is an exact
+    integer — no floats anywhere."""
+
+    def straddling(n: int) -> list[int]:
+        ranks = []
+        for k in (1, 2, 3):
+            m = k * (n - 1)
+            ranks += [m // 4 + 1, m // 4 + 1 + (1 if m % 4 else 0)]
+        return ranks
+
+    out = {}
+    for g, (vals, n) in select_ranks(df, value_col, straddling, group_col).items():
+        row = [n]
+        for k in (1, 2, 3):
+            m = k * (n - 1)
+            lo, r = m // 4 + 1, m % 4
+            row.append(vals[lo] * (4 - r) + vals[lo + (1 if r else 0)] * r)
+        out[g] = tuple(row)
+    return out
 
 
 def grouped_percentile_doubles(
@@ -948,7 +815,7 @@ def grouped_percentile_doubles(
 ) -> dict:
     """EXACT per-group continuous percentiles of a fixed-decimal DOUBLE
     column, BIT-IDENTICAL to Spark's ``percentile(col, frac)`` aggregate
-    (pinned by tests/test_operators.py), via :func:`grouped_rank_values`.
+    (pinned by tests/test_operators.py), via :func:`select_ranks`.
 
     Requires every value to be an exact multiple of ``1/scale`` with
     ``scale`` a power of ten (TPC-H money columns): then
@@ -977,7 +844,7 @@ def grouped_percentile_doubles(
             out += [math.floor(pos) + 1, math.ceil(pos) + 1]
         return out
 
-    sel = grouped_rank_values(quant, "g", "c", want)
+    sel = select_ranks(quant, "c", want, "g")
     result = {}
     for g, (vals, n) in sel.items():
         outs = []
@@ -992,71 +859,6 @@ def grouped_percentile_doubles(
                 outs.append((higher - pos) * v_lo + (pos - lower) * v_hi)
         result[g] = outs
     return result
-
-
-def global_kth_smallest(df: DataFrame, col: str, rank) -> tuple[int, int]:
-    """EXACT order-statistic selection of an integral column by distributed
-    quickselect — the selection complement of :func:`global_row_number`
-    when only ONE order statistic is needed (a full two-phase rank pays
-    range-sampling + checkpoint + offset machinery for ranks that are
-    thrown away).
-
-    ``rank`` is the 1-based target rank, either an int or a callable
-    ``n -> rank`` resolved against the relation size (so "lower median" =
-    ``lambda n: (n + 1) // 2`` costs no extra counting pass — the size
-    falls out of the first histogram). Returns ``(value, n_rows)``.
-
-    Histogram narrowing: each round splits the live value range into
-    <= _HIST_BUCKETS equal integer buckets, one map-side-combinable groupBy
-    counts them (driver collect bounded by _HIST_BUCKETS+1 rows), and the search
-    descends into the bucket containing the target rank. The range
-    shrinks by 2^14 per round, so <= 6 rounds resolve any 64-bit range —
-    every pass is a filter + partial-agg over a localCheckpoint'd
-    relation, no sort anywhere, driver state bounded by the bucket
-    count."""
-    # lazy checkpoint: the min/max job materializes the blocks (one job
-    # saved per use — the same fuse as the two-phase rank family)
-    src = df.select(F.col(col).alias("v")).localCheckpoint(eager=False)
-    mm = src.agg(F.min("v").alias("mn"), F.max("v").alias("mx")).collect()[0]
-    lo, hi = mm.mn, mm.mx
-    if lo is None:
-        raise ValueError("k-th smallest of an empty relation")
-    kk = None
-    n_total = None
-    # ONE checkpoint, ONE job per round: the narrowed bounds are known
-    # exactly from the chosen bucket (no re-min/max, no re-checkpoint —
-    # each round is a filtered partial-agg scan of the same checkpoint;
-    # per-job fixed cost dominates small rounds, so fewer jobs wins)
-    for _ in range(8):
-        width = (hi - lo) // _HIST_BUCKETS + 1
-        # integer DIV, not float-divide-then-cast (one-off-the-floor hazard
-        # on large magnitudes — NOTES.md round-3)
-        hist = (
-            src.where((F.col("v") >= lo) & (F.col("v") <= hi))
-            .groupBy(F.expr(f"CAST((v - {lo}) DIV {width} AS BIGINT)").alias("b"))
-            .count()
-            .collect()
-        )
-        if n_total is None:
-            n_total = sum(r["count"] for r in hist)
-            kk = rank(n_total) if callable(rank) else rank
-            if not 1 <= kk <= n_total:
-                raise ValueError(f"rank {kk} outside 1..{n_total}")
-        if lo == hi:
-            return lo, n_total
-        acc = 0
-        g = None
-        for row in sorted(hist, key=lambda r: r.b):
-            if acc + row["count"] >= kk:
-                g = row.b
-                kk -= acc
-                break
-            acc += row["count"]
-        assert g is not None
-        if width == 1:
-            return lo + g, n_total
-        lo, hi = lo + g * width, min(hi, lo + g * width + width - 1)
-    raise AssertionError("quickselect failed to converge in 8 rounds")
 
 
 @register(
