@@ -368,3 +368,127 @@ def test_kaplan_meier_matches_python_product_limit(spark, subjects):
         else:
             assert r.log_survival == round(float(acc), 6)
     assert set(got) == set(m)
+
+
+# ---------------------------------------------------------------------------
+# Vector-search core: cosine top-k and frozen-IVF cell ranking vs numpy
+# ---------------------------------------------------------------------------
+
+
+def _fold_dot(a, b):
+    """The engine's dot(): a sequential double fold of the products."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += x * y
+    return acc
+
+
+def _round_half_up(x, dp):
+    """round() on a double: HALF_UP on its shortest decimal form."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-dp), rounding=ROUND_HALF_UP))
+
+
+_small_vec = st.lists(st.integers(-3, 3), min_size=4, max_size=4).filter(any)
+
+
+@given(
+    base=st.lists(_small_vec, min_size=1, max_size=6),
+    dups=st.lists(st.integers(0, 5), max_size=4),
+    pairs=st.sets(st.tuples(st.integers(0, 9), st.integers(0, 9)), max_size=40),
+    k=st.integers(1, 6),
+)
+@example(base=[[1, 0, 0, 0]], dups=[0, 0], pairs=set(), k=3)  # no candidates
+@example(  # duplicate neighbors tie on cosine; k exceeds the candidate count
+    base=[[1, 2, 0, 0], [0, 1, 0, 0]],
+    dups=[0, 0, 1],
+    pairs={(0, 1), (0, 2), (0, 3), (0, 4), (2, 3)},
+    k=6,
+)
+@settings(**SETTINGS)
+def test_cosine_topk_matches_lexsort(spark, base, dups, pairs, k):
+    """Exact cosine re-rank + top-k == numpy lexsort on (cosine desc,
+    neighbor_id asc) per query, for any candidate set: duplicate vectors
+    force cosine ties onto the neighbor_id tiebreak, k may exceed a
+    query's candidates, and no candidates gives no rows."""
+    import math
+
+    import numpy as np
+
+    from wheels_in_motion_analytics_spark.functions.similarity import (
+        _exact_cosine_rerank,
+        _norm_vectors_of,
+        cosine_topk,
+    )
+
+    vecs = [[float(x) for x in v] for v in base + [base[d % len(base)] for d in dups]]
+    pairs = sorted((q, n) for q, n in pairs if q != n and max(q, n) < len(vecs))
+    nv = _norm_vectors_of(
+        spark.createDataFrame(list(enumerate(vecs)), "vec_id long, embedding array<float>")
+    )
+    cand = spark.createDataFrame(pairs, "query_id long, neighbor_id long")
+    top = cosine_topk(_exact_cosine_rerank(nv, cand), k)
+    got = {(r.query_id, r.rnk): (r.neighbor_id, r.cosine) for r in top.collect()}
+
+    nrm = [math.sqrt(_fold_dot(v, v)) for v in vecs]
+    want = {}
+    for q in sorted({q for q, _ in pairs}):
+        nb = np.array([n for qq, n in pairs if qq == q])
+        cos = np.array(
+            [_round_half_up(_fold_dot(vecs[q], vecs[n]) / (nrm[q] * nrm[n]), 4) for n in nb]
+        )
+        for rnk, i in enumerate(np.lexsort((nb, -cos))[:k], 1):
+            want[(q, rnk)] = (int(nb[i]), float(cos[i]))
+    assert got == want
+
+
+@given(
+    rand=st.lists(st.lists(st.integers(-3, 3), min_size=64, max_size=64).filter(any), max_size=3),
+    copies=st.lists(st.integers(0, 15), max_size=3),
+    mids=st.lists(st.tuples(st.integers(0, 15), st.integers(0, 15)), max_size=2),
+    dups=st.integers(0, 2),
+    keep=st.sampled_from([1, 2, 3, 16, 20]),
+)
+@example(rand=[], copies=[], mids=[], dups=0, keep=3)  # empty relation
+@example(rand=[], copies=[4, 4], mids=[(2, 9)], dups=1, keep=20)
+@settings(**SETTINGS)
+def test_cell_ranks_matches_lexsort(spark, rand, copies, mids, dups, keep):
+    """Frozen-IVF cell ranking == numpy lexsort on (6-dp sim desc, cell
+    asc) per vector: exact centroid copies (sim 1.0), centroid midpoints
+    (two cells tie on sim, so the cell id decides), duplicate vectors,
+    keep beyond the 16 cells, and the empty relation."""
+    import math
+
+    import numpy as np
+
+    from wheels_in_motion_analytics_spark.functions.ivf_artifact import (
+        IVF_FROZEN_CENTROIDS,
+    )
+    from wheels_in_motion_analytics_spark.functions.similarity import (
+        _norm_vectors_of,
+        cell_ranks,
+    )
+
+    cents = [[float(v) for v in row] for row in IVF_FROZEN_CENTROIDS]
+    vecs = (
+        [[float(x) for x in v] for v in rand]
+        + [cents[c] for c in copies]
+        + [[a + b for a, b in zip(cents[i], cents[j])] for i, j in mids]
+    )
+    vecs += vecs[:dups]
+    nv = _norm_vectors_of(
+        spark.createDataFrame(list(enumerate(vecs)), "vec_id long, embedding array<double>")
+    )
+    ranked = cell_ranks(nv, keep)
+    assert ranked.columns == nv.columns + ["cell", "sim", "rnk"]
+    got = {(r.vec_id, r.rnk): (r.cell, r.sim) for r in ranked.collect()}
+
+    cells = np.arange(len(cents))
+    want = {}
+    for vid, v in enumerate(vecs):
+        nrm = math.sqrt(_fold_dot(v, v))
+        sim = np.array([_round_half_up(_fold_dot(v, c) / nrm, 6) for c in cents])
+        for rnk, i in enumerate(np.lexsort((cells, -sim))[:keep], 1):
+            want[(vid, rnk)] = (int(i), float(sim[i]))
+    assert got == want

@@ -86,23 +86,6 @@ def test_ivf_frozen_artifact_matches_trainer(spark):
     assert np.allclose(trained, frozen, rtol=0, atol=1e-12)
 
 
-def test_bruteforce_matmul_twin_matches_blocked_plan(spark):
-    """The bench-only driver-collect matmul twin must produce exactly the
-    registered collect-free block-nested-loop plan's relation — pins that
-    de-collecting the baseline changed the plan, not the semantics."""
-    from wheels_in_motion_analytics_spark.functions.similarity import bruteforce_topk_matmul
-
-    rel = {
-        (r.query_id, r.rnk): (r.neighbor_id, r.cosine)
-        for r in SPECS["similarity_topk_bruteforce"].fn(spark, SF_SMALL).collect()
-    }
-    mm = {
-        (r.query_id, r.rnk): (r.neighbor_id, r.cosine)
-        for r in bruteforce_topk_matmul(spark, SF_SMALL).collect()
-    }
-    assert rel == mm
-
-
 def test_multimodal_feature_extraction_real_decode(spark):
     """mapInPandas features over REAL PPM files: one row per doc, parsed
     dimensions from actual headers, channel sums cross-checked against an

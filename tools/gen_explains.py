@@ -114,6 +114,13 @@ PICKS += [
     ("lift_curve_deciles", "two-phase exact ntile -> 10-row decile relation -> broadcast totals"),
     ("permutation_test_segment_revenue", "repartitioned base -> B-row broadcast fan-out -> one map-side-combinable replica agg"),
 ]
+# the vector-search family on the shared core (hyperplane_buckets,
+# _exact_cosine_rerank, cosine_topk, cell_ranks, _adc_lut)
+PICKS += [
+    ("ann_lsh_bucketed", "checkpointed hyperplane buckets -> (tbl,bucket) self-join -> join-back re-rank -> mirrored top-1"),
+    ("ann_multiprobe_lsh", "XOR probe set broadcast onto the (tbl,bucket) hash join -> join-back re-rank -> top-3"),
+    ("ann_ivf_pq_search", "checkpointed cell ranks -> probe/assign hash join -> PQ codes join -> broadcast LUT join -> top-3"),
+]
 # partitioned_sink_pruned_read deliberately NOT picked: its result is
 # localCheckpoint'd (temp-dir cleanup), so the captured plan is a lineage-cut
 # Scan ExistingRDD; the pruning property is pinned by

@@ -15,9 +15,16 @@ part of the training-data-pipeline surface (SURVEY.md §2d).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
+from wheels_in_motion_analytics_spark.functions.similarity import (
+    _norm_vectors_of,
+    _oracle_cents,
+    cell_ranks,
+    dot,
+    oracle_vector_values,
+)
 from wheels_in_motion_analytics_spark.registry import register
 from wheels_in_motion_analytics_spark.tables import table
 
@@ -67,26 +74,41 @@ def train_pq_codebooks(spark: SparkSession, sf_dir: str):
     return _pq_codebooks(mat)
 
 
-def _oracle_pq() -> str:
+def _codebook_rows():
+    """(m, k, codeword) over the frozen per-subspace codebooks."""
     from wheels_in_motion_analytics_spark.functions.pq_artifact import (
         PQ_FROZEN_CODEBOOKS,
     )
 
-    values = ",\n    ".join(
-        f"({m}, {k}, [{', '.join(repr(float(v)) for v in row)}])"
+    return [
+        (m, k, [float(v) for v in row])
         for m, book in enumerate(PQ_FROZEN_CODEBOOKS)
         for k, row in enumerate(book)
-    )
+    ]
+
+
+def _oracle_codebook() -> str:
+    """The frozen codebooks as the oracle CTE ``cb (m, k, c)``."""
+    return oracle_vector_values("cb", "m, k, c", _codebook_rows())
+
+
+def _sq_l2(a: Column, b: Column) -> Column:
+    """Squared L2 distance of two double-array columns on the 6-dp grid."""
+    return F.round(dot(a, a) - F.lit(2.0) * dot(a, b) + dot(b, b), 6)
+
+
+def _micro(d: Column) -> Column:
+    """A 6-dp distance as exact integer micro-units (half-up)."""
+    return F.floor(d * 1000000 + F.lit(0.5)).cast("bigint")
+
+
+def _oracle_pq() -> str:
     return f"""
 WITH e AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
   FROM embeddings
 ),
-cb (m, k, c) AS (
-  SELECT * FROM (VALUES
-    {values}
-  ) AS t(m, k, c)
-),
+{_oracle_codebook()},
 sub AS (
   SELECT vec_id, i AS m,
          list_slice(e, CAST(i * {PQ_SUBDIM} + 1 AS INTEGER),
@@ -116,18 +138,7 @@ GROUP BY vec_id
 
 
 def _codebook_df(spark: SparkSession) -> DataFrame:
-    from wheels_in_motion_analytics_spark.functions.pq_artifact import (
-        PQ_FROZEN_CODEBOOKS,
-    )
-
-    return spark.createDataFrame(
-        [
-            (m, k, [float(v) for v in row])
-            for m, book in enumerate(PQ_FROZEN_CODEBOOKS)
-            for k, row in enumerate(book)
-        ],
-        "m BIGINT, k BIGINT, c ARRAY<DOUBLE>",
-    )
+    return spark.createDataFrame(_codebook_rows(), "m BIGINT, k BIGINT, c ARRAY<DOUBLE>")
 
 
 def _subspace_rows(df: DataFrame, vec_col: str = "e") -> DataFrame:
@@ -165,20 +176,13 @@ def _pq_assignments(
     checkpoints it for routing) pass it in so the encode half reads the
     SAME blocks instead of re-scanning parquet and re-casting (r11, guide
     §1.2: don't compute things twice)."""
-    from wheels_in_motion_analytics_spark.functions.similarity import dot
-
     if e is None:
         e = table(spark, sf_dir, "embeddings").select(
             "vec_id",
             F.transform("embedding", lambda x: x.cast("double")).alias("e"),
         )
-    sub = _subspace_rows(e)
-    s, c = F.col("s"), F.col("c")
-    scored = sub.join(F.broadcast(_codebook_df(spark)), "m").select(
-        "vec_id",
-        "m",
-        "k",
-        F.round(dot(s, s) - F.lit(2.0) * dot(s, c) + dot(c, c), 6).alias("d"),
+    scored = _subspace_rows(e).join(F.broadcast(_codebook_df(spark)), "m").select(
+        "vec_id", "m", "k", _sq_l2(F.col("s"), F.col("c")).alias("d")
     )
     return (
         scored.groupBy("vec_id", "m")
@@ -186,6 +190,15 @@ def _pq_assignments(
         .select("vec_id", "m", F.col("b.k").alias("k"), F.col("b.d").alias("d"))
     )
 
+
+def _adc_lut(queries: DataFrame) -> DataFrame:
+    """The per-query ADC lookup table: (query id, m, k, lm) from a
+    (query id, q double[]) relation — each query subspace's squared
+    distance to every codeword, in integer micro-units."""
+    qid = queries.columns[0]
+    return _subspace_rows(queries, vec_col="q").join(
+        F.broadcast(_codebook_df(queries.sparkSession)), "m"
+    ).select(qid, "m", "k", _micro(_sq_l2(F.col("s"), F.col("c"))).alias("lm"))
 
 
 @register(
@@ -211,7 +224,7 @@ def pq_encode_reconstruction_error(spark: SparkSession, sf_dir: str) -> DataFram
     best = _pq_assignments(spark, sf_dir).select(
         "vec_id",
         F.expr("shiftleft(k, cast(4 * m as int))").alias("code_part"),
-        F.floor(F.col("d") * 1000000 + F.lit(0.5)).cast("bigint").alias("e_part"),
+        _micro(F.col("d")).alias("e_part"),
     )
     return best.groupBy("vec_id").agg(
         F.sum("code_part").cast("bigint").alias("pq_code"),
@@ -228,25 +241,12 @@ ADC_TOPK = 5
 
 
 def _oracle_pq_adc() -> str:
-    from wheels_in_motion_analytics_spark.functions.pq_artifact import (
-        PQ_FROZEN_CODEBOOKS,
-    )
-
-    values = ",\n    ".join(
-        f"({m}, {k}, [{', '.join(repr(float(v)) for v in row)}])"
-        for m, book in enumerate(PQ_FROZEN_CODEBOOKS)
-        for k, row in enumerate(book)
-    )
     return f"""
 WITH e AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
   FROM embeddings
 ),
-cb (m, k, c) AS (
-  SELECT * FROM (VALUES
-    {values}
-  ) AS t(m, k, c)
-),
+{_oracle_codebook()},
 sub AS (
   SELECT vec_id, i AS m,
          list_slice(e, CAST(i * {PQ_SUBDIM} + 1 AS INTEGER),
@@ -323,10 +323,6 @@ JOIN e x ON t.vec_id = x.vec_id
     oracle=_oracle_pq_adc(),
 )
 def pq_adc_topk_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from wheels_in_motion_analytics_spark.functions.similarity import dot
-
     e = (
         table(spark, sf_dir, "embeddings")
         .select(
@@ -342,20 +338,7 @@ def pq_adc_topk_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchors = e.where(F.col("vec_id") % ADC_ANCHOR_MOD == 0).select(
         F.col("vec_id").alias("anchor_id"), F.col("e").alias("q")
     )
-    asub = _subspace_rows(anchors, vec_col="q").withColumnRenamed("s", "qs")
-    qs, c = F.col("qs"), F.col("c")
-    lut = asub.join(F.broadcast(_codebook_df(spark)), "m").select(
-        "anchor_id",
-        "m",
-        "k",
-        F.floor(
-            F.round(dot(qs, qs) - F.lit(2.0) * dot(qs, c) + dot(c, c), 6)
-            * 1000000
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("lm"),
-    )
+    lut = _adc_lut(anchors)
     adc = (
         codes.join(F.broadcast(lut), ["m", "k"])
         .where(F.col("vec_id") != F.col("anchor_id"))
@@ -368,7 +351,6 @@ def pq_adc_topk_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = adc.withColumn("rn", F.row_number().over(w)).where(
         F.col("rn") <= ADC_TOPK
     )
-    q, x = F.col("q"), F.col("x")
     return (
         top.join(F.broadcast(anchors), "anchor_id")
         .join(e.select("vec_id", F.col("e").alias("x")), "vec_id")
@@ -377,13 +359,7 @@ def pq_adc_topk_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "rn",
             "adc_micro",
-            F.floor(
-                F.round(dot(q, q) - F.lit(2.0) * dot(q, x) + dot(x, x), 6)
-                * 1000000
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("exact_micro"),
+            _micro(_sq_l2(F.col("q"), F.col("x"))).alias("exact_micro"),
         )
     )
 
@@ -397,38 +373,14 @@ IVFPQ_TOPK = 3
 
 
 def _oracle_ivf_pq() -> str:
-    from wheels_in_motion_analytics_spark.functions.ivf_artifact import (
-        IVF_FROZEN_CENTROIDS,
-    )
-    from wheels_in_motion_analytics_spark.functions.pq_artifact import (
-        PQ_FROZEN_CODEBOOKS,
-    )
-
-    cent_values = ",\n    ".join(
-        f"({c}, [{', '.join(repr(float(v)) for v in row)}])"
-        for c, row in enumerate(IVF_FROZEN_CENTROIDS)
-    )
-    cb_values = ",\n    ".join(
-        f"({m}, {k}, [{', '.join(repr(float(v)) for v in row)}])"
-        for m, book in enumerate(PQ_FROZEN_CODEBOOKS)
-        for k, row in enumerate(book)
-    )
     return f"""
 WITH n AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
   FROM embeddings
 ),
 nn AS (SELECT vec_id, e, sqrt(list_dot_product(e, e)) AS nrm FROM n),
-cents (cell, cvec) AS (
-  SELECT * FROM (VALUES
-    {cent_values}
-  ) AS t(cell, cvec)
-),
-cb (m, k, c) AS (
-  SELECT * FROM (VALUES
-    {cb_values}
-  ) AS t(m, k, c)
-),
+{_oracle_cents()},
+{_oracle_codebook()},
 sims AS (
   SELECT vec_id, cell,
          ROUND(list_dot_product(e, cvec) / nrm, 6) AS sim,
@@ -506,34 +458,12 @@ SELECT query_id, neighbor_id, adc_micro FROM (
     oracle=_oracle_ivf_pq(),
 )
 def ann_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from wheels_in_motion_analytics_spark.functions.ivf_artifact import (
-        IVF_FROZEN_CENTROIDS,
-    )
-    from wheels_in_motion_analytics_spark.functions.similarity import dot
-
-    n = table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("e"),
-    )
-    nn = n.withColumn("nrm", F.sqrt(dot(F.col("e"), F.col("e")))).localCheckpoint()
-    cdf = spark.createDataFrame(
-        [(c, [float(v) for v in row]) for c, row in enumerate(IVF_FROZEN_CENTROIDS)],
-        "cell INT, cvec ARRAY<DOUBLE>",
-    )
-    sims = nn.crossJoin(F.broadcast(cdf)).select(
-        "vec_id",
-        "cell",
-        F.round(dot(F.col("e"), F.col("cvec")) / F.col("nrm"), 6).alias("sim"),
-    )
-    wc = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cell"))
-    ranked = sims.withColumn("rnk", F.row_number().over(wc)).localCheckpoint()
+    nn = _norm_vectors_of(table(spark, sf_dir, "embeddings")).localCheckpoint()
+    ranked = cell_ranks(nn, IVFPQ_NPROBE).select("vec_id", "cell", "rnk").localCheckpoint()
     assign = ranked.where(F.col("rnk") == 1).select("vec_id", "cell")
-    qprobe = ranked.where(
-        (F.col("rnk") <= IVFPQ_NPROBE)
-        & (F.col("vec_id") % ADC_ANCHOR_MOD == 0)
-    ).select(F.col("vec_id").alias("query_id"), "cell")
+    qprobe = ranked.where(F.col("vec_id") % ADC_ANCHOR_MOD == 0).select(
+        F.col("vec_id").alias("query_id"), "cell"
+    )
     # encode from the SAME checkpointed cast corpus the routing half uses
     # (was a second parquet scan + array cast); no checkpoint on codes —
     # it has exactly one consumer (the candidate join), so an eager
@@ -541,25 +471,10 @@ def ann_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes = _pq_assignments(spark, sf_dir, e=nn.select("vec_id", "e")).select(
         "vec_id", "m", "k"
     )
-    # per-query LUT: the query's subspace slices against every codeword
-    qsub = _subspace_rows(
+    lut = _adc_lut(
         nn.where(F.col("vec_id") % ADC_ANCHOR_MOD == 0).select(
             F.col("vec_id").alias("query_id"), F.col("e").alias("q")
-        ),
-        vec_col="q",
-    ).withColumnRenamed("s", "qs")
-    qs, c = F.col("qs"), F.col("c")
-    lut = qsub.join(F.broadcast(_codebook_df(spark)), "m").select(
-        "query_id",
-        "m",
-        "k",
-        F.floor(
-            F.round(dot(qs, qs) - F.lit(2.0) * dot(qs, c) + dot(c, c), 6)
-            * 1000000
-            + F.lit(0.5)
         )
-        .cast("bigint")
-        .alias("lm"),
     )
     cand = (
         qprobe.join(assign, "cell")

@@ -436,83 +436,167 @@ def dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
-def _norm_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # _norm_vectors_of is defined below; resolved at call time
-    return _norm_vectors_of(table(spark, sf_dir, "embeddings").select("vec_id", "embedding"))
+# ---------------------------------------------------------------------------
+# Vector-search core: every step the ANN, SemDeDup and PQ queries share,
+# written once — normalize, rank the frozen IVF cells, bucket by hyperplane
+# sign, re-rank candidate pairs by exact cosine, keep the top k — plus the
+# DuckDB renderers of the same constants.
+# ---------------------------------------------------------------------------
+
+ANN_TABLES = 8  # L independent hash tables
+ANN_BITS = 5  # bits (hyperplanes) per table
+ANN_DIM = 64
 
 
-def _broadcast_candidate_matrix(spark: SparkSession, sf_dir: str):
-    """BENCH/TEST-ONLY: corpus as a broadcast numpy matrix (driver collect).
+def _hyperplanes(n_planes: int | None = None) -> list[list[float]]:
+    """Deterministic pseudo-random hyperplanes in [-1, 1], md5-seeded.
 
-    Not used by any registry query — the registered exact baselines
-    (similarity_topk_bruteforce / embedding_near_dup_pairs) score candidate
-    pairs through the collect-free :func:`_exact_cosine_rerank` join-back.
-    This gather exists only so tests and the LSH-vs-exact crossover bench
-    can compare the BLAS-matmul formulation against the relational plan.
-    Memory contract = broadcast hash-join build side: |vectors| × dim × 8 B
-    must fit per executor.
+    Driver-side constants (tiny), broadcast into the plan as literals — the
+    equivalent of shipping a small model artifact with the job.
     """
-    import numpy as np
+    planes = []
+    for p in range(ANN_TABLES * ANN_BITS if n_planes is None else n_planes):
+        row = []
+        for d in range(ANN_DIM):
+            h = int(hashlib.md5(f"plane:{p}:{d}".encode()).hexdigest()[:15], 16)
+            row.append((h / float(1 << 60)) * 2.0 - 1.0)
+        planes.append(row)
+    return planes
 
-    rows = (
-        table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
+
+def _norm_vectors_of(vectors: DataFrame) -> DataFrame:
+    """(vec_id, e double[], nrm) from any (vec_id, embedding) DataFrame."""
+    e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    return vectors.select("vec_id", e.alias("e")).withColumn(
+        "nrm", F.sqrt(dot(F.col("e"), F.col("e")))
     )
-    ids = np.array([r.vec_id for r in rows], dtype="int64")
-    mat = np.array([r.embedding for r in rows], dtype="float64")
-    norms = np.sqrt((mat * mat).sum(axis=1))
-    return spark.sparkContext.broadcast((ids, mat, norms))
 
 
-def bruteforce_topk_matmul(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BENCH/TEST-ONLY matmul twin of similarity_topk_bruteforce: one BLAS
-    matmul per Arrow batch against the broadcast corpus matrix. Same output
-    relation; kept for the crossover benchmark and an equality test."""
-    import pyspark.sql.types as T
+def _centroid_df(spark: SparkSession) -> DataFrame:
+    """The frozen IVF coarse quantizer as a (cell, cvec double[]) relation."""
+    from wheels_in_motion_analytics_spark.functions.ivf_artifact import (
+        IVF_FROZEN_CENTROIDS,
+    )
 
-    bc = _broadcast_candidate_matrix(spark, sf_dir)
+    return spark.createDataFrame(
+        [(c, [float(v) for v in row]) for c, row in enumerate(IVF_FROZEN_CENTROIDS)],
+        "cell INT, cvec ARRAY<DOUBLE>",
+    )
 
-    def block(batches):
+
+def cell_ranks(nv: DataFrame, keep: int) -> DataFrame:
+    """``nv`` columns plus (cell, sim, rnk): each vector's ``keep`` nearest
+    frozen IVF cells. The 16-row centroid relation is broadcast into a
+    crossJoin (n × cells rows); the JVM-side sequential-fold dot product
+    matches the oracle's list_dot_product, and the cosine is rounded to
+    6 dp so ranking ties break portably on the cell id."""
+    sim = F.round(dot(F.col("e"), F.col("cvec")) / F.col("nrm"), 6)
+    w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cell"))
+    return (
+        nv.crossJoin(F.broadcast(_centroid_df(nv.sparkSession)))
+        .withColumn("sim", sim)
+        .drop("cvec")
+        .withColumn("rnk", F.row_number().over(w))
+        .where(F.col("rnk") <= keep)
+    )
+
+
+def hyperplane_buckets(nv: DataFrame, tables: int, bits: int) -> DataFrame:
+    """(vec_id, tbl, bucket): ``tables`` random-hyperplane signatures of
+    ``bits`` sign bits per vector of ``nv``, all tables in one numpy matmul
+    per Arrow batch against the md5-seeded plane matrix."""
+    planes = _hyperplanes(tables * bits)
+
+    def signatures(batches):
         import numpy as np
         import pandas as pd
 
-        ids, mat, norms = bc.value
+        pm = np.array(planes, dtype="float64")  # (tables*bits) x dim
+        weights = np.array([1 << i for i in range(bits)], dtype="int64")
         for pdf in batches:
             if not len(pdf):
                 continue
-            q = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            qids = pdf["vec_id"].to_numpy()
-            qn = np.sqrt((q * q).sum(axis=1))
-            # cosine rounded to 4 dp so the blocked summation agrees with
-            # the sequential-sum relational plan and the DuckDB oracle
-            sims = np.round((q @ mat.T) / np.outer(qn, norms), 4)
-            out_q, out_n, out_c, out_r = [], [], [], []
-            for i in range(len(qids)):
-                row = sims[i]
-                mask = ids != qids[i]
-                cand = np.lexsort((ids[mask], -row[mask]))[:ANN_TOPK]
-                out_q.extend([qids[i]] * len(cand))
-                out_n.extend(ids[mask][cand].tolist())
-                out_c.extend(row[mask][cand].tolist())
-                out_r.extend(range(1, len(cand) + 1))
+            q = np.stack(pdf["e"].to_numpy()).astype("float64")
+            sgn = (q @ pm.T >= 0).astype("int64").reshape(len(q), tables, bits)
             yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "cosine": out_c, "rnk": out_r}
+                {
+                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), tables),
+                    "tbl": np.tile(np.arange(tables), len(q)),
+                    "bucket": (sgn * weights).sum(axis=2).reshape(-1),
+                }
             )
 
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-            T.StructField("rnk", T.IntegerType()),
-        ]
+    return nv.select("vec_id", "e").mapInPandas(
+        signatures, "vec_id BIGINT, tbl INT, bucket BIGINT"
     )
+
+
+def _exact_cosine_rerank(nv: DataFrame, pairs: DataFrame) -> DataFrame:
+    """``pairs`` (query_id, neighbor_id, any other columns pass through)
+    plus their exact 4-dp cosine, WITHOUT any driver-side corpus collect:
+    join the pair list back to the normalized relation ``nv`` for both
+    sides' vectors. Each join is a plain hash join on vec_id —
+    co-partitionable at 100 TB, where the corpus can never be collected or
+    broadcast (the round-1 weakness of the gather-from-broadcast-matrix
+    re-rank). Locally the optimizer still auto-broadcasts the small vector
+    side by size. The dot product is a JVM-side higher-order fold —
+    measured faster than an Arrow pandas UDF here, because shipping two
+    vectors per candidate pair through Arrow costs more than the fold
+    saves."""
+    q = nv.select(
+        F.col("vec_id").alias("query_id"), F.col("e").alias("q_e"), F.col("nrm").alias("q_nrm")
+    )
+    n = nv.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("e").alias("n_e"), F.col("nrm").alias("n_nrm")
+    )
+    cosine = dot(F.col("q_e"), F.col("n_e")) / (F.col("q_nrm") * F.col("n_nrm"))
     return (
-        table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .mapInPandas(block, schema)
+        pairs.join(q, "query_id")
+        .join(n, "neighbor_id")
+        .select(*pairs.columns, F.round(cosine, 4).alias("cosine"))
+    )
+
+
+def cosine_topk(scored: DataFrame, k: int) -> DataFrame:
+    """``scored`` plus ``rnk``, keeping each query's top ``k`` rows under the
+    total order (cosine desc, neighbor_id asc)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return scored.withColumn("rnk", F.row_number().over(w)).where(F.col("rnk") <= k)
+
+
+def oracle_vector_values(name: str, cols: str, rows) -> str:
+    """A DuckDB ``VALUES`` CTE ``name (cols)`` over (key..., vector) rows. The
+    vectors embed as repr'd double literals, so both engines parse
+    bit-identical constants."""
+    values = ",\n    ".join(
+        f"({''.join(f'{k}, ' for k in keys)}[{', '.join(repr(float(v)) for v in vec)}])"
+        for *keys, vec in rows
+    )
+    return f"{name} ({cols}) AS (\n  SELECT * FROM (VALUES\n    {values}\n  ) AS t({cols})\n)"
+
+
+def _oracle_cents() -> str:
+    """The frozen IVF centroids as the oracle CTE ``cents (cell, cvec)``."""
+    from wheels_in_motion_analytics_spark.functions.ivf_artifact import (
+        IVF_FROZEN_CENTROIDS,
+    )
+
+    return oracle_vector_values("cents", "cell, cvec", enumerate(IVF_FROZEN_CENTROIDS))
+
+
+def _oracle_hyperplane_buckets(tables: int, bits: int) -> str:
+    """DuckDB rendition of :func:`hyperplane_buckets` over the ``nn`` CTE:
+    the planes as repr'd double literals, the same >= 0 sign rule."""
+    planes = _hyperplanes(tables * bits)
+    return "\n  UNION ALL ".join(
+        f"SELECT vec_id, {t} AS tbl, ("
+        + " + ".join(
+            f"(CASE WHEN list_dot_product(e, [{', '.join(repr(v) for v in planes[t * bits + i])}]) >= 0 "
+            f"THEN {1 << i} ELSE 0 END)"
+            for i in range(bits)
+        )
+        + ") AS bucket FROM nn"
+        for t in range(tables)
     )
 
 
@@ -625,8 +709,7 @@ ANN_TOPK = 3
     "(quadratic cell count), but collect-free AND matmul-speed: distributed "
     "block-nested-loop via _blocked_pair_scores (bounded chunks, one numpy "
     "matmul per cell, exact global top-k merge). No driver collect / corpus "
-    "broadcast anywhere in the plan. The scale path is ann_lsh_bucketed; "
-    "the driver-collect matmul twin bruteforce_topk_matmul is bench/test-only.",
+    "broadcast anywhere in the plan. The scale path is ann_lsh_bucketed.",
     oracle=f"""
 WITH {_ORACLE_NORM}
 SELECT query_id, neighbor_id, cosine, CAST(rnk AS INTEGER) AS rnk FROM (
@@ -642,16 +725,9 @@ SELECT query_id, neighbor_id, cosine, CAST(rnk AS INTEGER) AS rnk FROM (
 """,
 )
 def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     vectors = table(spark, sf_dir, "embeddings").select("vec_id", "embedding").localCheckpoint()
     # per-cell top-k candidates (B×k per query), then exact global top-k
-    cand = _blocked_pair_scores(vectors, mode="topk", topk=ANN_TOPK)
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        cand.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .where(F.col("rnk") <= ANN_TOPK)
-    )
+    return cosine_topk(_blocked_pair_scores(vectors, mode="topk", topk=ANN_TOPK), ANN_TOPK)
 
 
 NEAR_DUP_COSINE = 0.4
@@ -689,120 +765,25 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # LSH-bucketed ANN — the scale path
 # ---------------------------------------------------------------------------
 
-ANN_TABLES = 8  # L independent hash tables
-ANN_BITS = 5  # bits (hyperplanes) per table
-ANN_DIM = 64
-
-
-def _hyperplanes(n_planes: int | None = None) -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes in [-1, 1], md5-seeded.
-
-    Driver-side constants (tiny), broadcast into the plan as literals — the
-    equivalent of shipping a small model artifact with the job.
-    """
-    planes = []
-    for p in range(ANN_TABLES * ANN_BITS if n_planes is None else n_planes):
-        row = []
-        for d in range(ANN_DIM):
-            h = int(hashlib.md5(f"plane:{p}:{d}".encode()).hexdigest()[:15], 16)
-            row.append((h / float(1 << 60)) * 2.0 - 1.0)
-        planes.append(row)
-    return planes
-
-
-def _norm_vectors_of(vectors: DataFrame) -> DataFrame:
-    """(vec_id, e double[], nrm) from any (vec_id, embedding) DataFrame."""
-    e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    return vectors.select("vec_id", e.alias("e")).withColumn(
-        "nrm", F.sqrt(dot(F.col("e"), F.col("e")))
-    )
-
-
-def _exact_cosine_rerank(vectors: DataFrame, cand: DataFrame) -> DataFrame:
-    """Exact cosine for candidate pairs WITHOUT any driver-side corpus
-    collect: join the pair list back to the vector table for both sides'
-    vectors. Each join is a plain hash join on vec_id — co-partitionable at
-    100 TB, where the corpus can never be collected or broadcast (the
-    round-1 weakness of the gather-from-broadcast-matrix re-rank). Locally
-    the optimizer still auto-broadcasts the small vector side by size. The
-    dot product is a JVM-side higher-order fold — measured faster than an
-    Arrow pandas UDF here, because shipping two vectors per candidate pair
-    through Arrow costs more than the fold saves."""
-    q = _norm_vectors_of(vectors).select(
-        F.col("vec_id").alias("q_id"), F.col("e").alias("q_e"), F.col("nrm").alias("q_nrm")
-    )
-    n = _norm_vectors_of(vectors).select(
-        F.col("vec_id").alias("n_id"), F.col("e").alias("n_e"), F.col("nrm").alias("n_nrm")
-    )
-    return (
-        cand.join(q, cand.query_id == q.q_id)
-        .join(n, cand.neighbor_id == n.n_id)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(dot(F.col("q_e"), F.col("n_e")) / (F.col("q_nrm") * F.col("n_nrm")), 4).alias("cosine"),
-        )
-    )
-
-
 def lsh_topk(vectors: DataFrame, tables: int = ANN_TABLES, bits: int = ANN_BITS) -> DataFrame:
     """Multi-table random-hyperplane LSH ANN over any (vec_id, embedding)
     DataFrame: per-table bucket hash joins for candidates, join-back exact
     cosine re-rank, top-1 per query. (tables × bits) is the recall/cost
     dial; size 2^bits ≳ corpus/targets-per-bucket so candidate sets stay
     bounded."""
-    import pyspark.sql.types as T
-    from pyspark.sql import Window
-
     # Callers may pass a COMPUTED corpus (e.g. the 16x rotation expansion);
     # three downstream consumers re-derive it otherwise (signature matmul,
     # query-side and neighbor-side of the re-rank join). Materialize once.
-    vectors = vectors.localCheckpoint()
+    nv = _norm_vectors_of(vectors).localCheckpoint()
+    # Self-joined below — materialize once so the signature matmul doesn't
+    # run for both sides of the join.
+    sigged = hyperplane_buckets(nv, tables, bits).localCheckpoint()
 
-    planes = _hyperplanes(tables * bits)
-
-    def signatures(batches):
-        """Stage 1 (numpy over Arrow batches): all table buckets per vector
-        in one matmul against the plane matrix."""
-        import numpy as np
-        import pandas as pd
-
-        pm = np.array(planes, dtype="float64")  # (tables*bits) x dim
-        weights = np.array([1 << i for i in range(bits)], dtype="int64")
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            q = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            sgn = (q @ pm.T >= 0).astype("int64").reshape(len(q), tables, bits)
-            buckets = (sgn * weights).sum(axis=2)  # n x tables
-            n = len(q)
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), tables),
-                    "tbl": np.tile(np.arange(tables), n),
-                    "bucket": buckets.reshape(-1),
-                }
-            )
-
-    sig_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("tbl", T.IntegerType()),
-            T.StructField("bucket", T.LongType()),
-        ]
-    )
-    sigged = (
-        vectors.mapInPandas(signatures, sig_schema)
-        # Self-joined below — materialize once so the signature matmul
-        # doesn't run for both sides of the join.
-        .localCheckpoint()
-    )
-
-    # Stage 2 (relational, the scale story): candidates = same (table,
-    # bucket) — a hash join on the bucket key, never all-pairs. Generated as
-    # ORDERED pairs (a < b): cosine is symmetric, so each unordered pair is
-    # scored once and mirrored afterwards — half the dedup shuffle and half
-    # the re-rank join volume of emitting both directions.
+    # Candidates = same (table, bucket) — a hash join on the bucket key,
+    # never all-pairs. Generated as ORDERED pairs (a < b): cosine is
+    # symmetric, so each unordered pair is scored once and mirrored
+    # afterwards — half the dedup shuffle and half the re-rank join volume
+    # of emitting both directions.
     a = sigged.alias("a")
     b = sigged.alias("b")
     cand = (
@@ -819,13 +800,13 @@ def lsh_topk(vectors: DataFrame, tables: int = ANN_TABLES, bits: int = ANN_BITS)
         .dropDuplicates(["query_id", "neighbor_id"])
     )
 
-    # Stage 3: exact cosine via join-back to the vector table — no driver
-    # collect, no corpus broadcast (see _exact_cosine_rerank). Mirror the
-    # scored pairs so every vector sees its full neighbor set for top-1.
-    # The mirror below references `scored` twice; without a lineage cut the
+    # Exact cosine via join-back to the vector table — no driver collect,
+    # no corpus broadcast (see _exact_cosine_rerank). Mirror the scored
+    # pairs so every vector sees its full neighbor set for top-1. The
+    # mirror below references `scored` twice; without a lineage cut the
     # whole candidate join + re-rank runs once per branch (exchange reuse is
     # plan-dependent under AQE — make it unconditional).
-    scored = _exact_cosine_rerank(vectors, cand).localCheckpoint()
+    scored = _exact_cosine_rerank(nv, cand).localCheckpoint()
     both = scored.unionByName(
         scored.select(
             F.col("neighbor_id").alias("query_id"),
@@ -833,12 +814,7 @@ def lsh_topk(vectors: DataFrame, tables: int = ANN_TABLES, bits: int = ANN_BITS)
             "cosine",
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        both.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") == 1)
-        .select("query_id", "neighbor_id", "cosine")
-    )
+    return cosine_topk(both, 1).select("query_id", "neighbor_id", "cosine")
 
 
 def _oracle_lsh_topk(
@@ -852,22 +828,10 @@ def _oracle_lsh_topk(
     ordered-pair join, cosine rounded to 4 decimals with the same
     neighbor_id tiebreak. ``norm_cte`` must end with an ``nn`` CTE exposing
     (vec_id, e double[], nrm); defaults to the raw embeddings table."""
-    planes = _hyperplanes(tables * bits_per_table)
-    per_table = []
-    for t in range(tables):
-        bits = " + ".join(
-            f"(CASE WHEN list_dot_product(e, [{', '.join(repr(v) for v in planes[t * bits_per_table + i])}]) >= 0 "
-            f"THEN {1 << i} ELSE 0 END)"
-            for i in range(bits_per_table)
-        )
-        per_table.append(
-            f"SELECT vec_id, {t} AS tbl, ({bits}) AS bucket FROM nn"
-        )
-    sig_sql = "\n  UNION ALL ".join(per_table)
     return f"""
 WITH {norm_cte if norm_cte is not None else _ORACLE_NORM},
 sig AS (
-  {sig_sql}
+  {_oracle_hyperplane_buckets(tables, bits_per_table)}
 ),
 cand AS (
   SELECT DISTINCT a.vec_id AS qa, b.vec_id AS qb
@@ -973,21 +937,9 @@ def _oracle_ivf_topk() -> str:
     rounded to 6 dp on both engines so ranking ties break portably on cell
     id; probe(nprobe)⋈assign(rank 1) candidate join, 4-dp re-rank and
     neighbor tiebreak all replicated."""
-    from wheels_in_motion_analytics_spark.functions.ivf_artifact import (
-        IVF_FROZEN_CENTROIDS,
-    )
-
-    cent_values = ",\n    ".join(
-        f"({c}, [{', '.join(repr(float(v)) for v in row)}])"
-        for c, row in enumerate(IVF_FROZEN_CENTROIDS)
-    )
     return f"""
 WITH {_ORACLE_NORM},
-cents (cell, cvec) AS (
-  SELECT * FROM (VALUES
-    {cent_values}
-  ) AS t(cell, cvec)
-),
+{_oracle_cents()},
 sims AS (
   SELECT vec_id, cell,
          ROUND(list_dot_product(e, cvec) / nrm, 6) AS sim
@@ -1037,39 +989,11 @@ SELECT query_id, neighbor_id, cosine FROM (
     oracle=_oracle_ivf_topk(),
 )
 def ann_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from wheels_in_motion_analytics_spark.functions.ivf_artifact import (
-        IVF_FROZEN_CENTROIDS,
-    )
-
-    vectors = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cdf = spark.createDataFrame(
-        [(c, [float(v) for v in row]) for c, row in enumerate(IVF_FROZEN_CENTROIDS)],
-        "cell INT, cvec ARRAY<DOUBLE>",
-    )
-    # Relational cell ranking: 16-row centroid relation broadcast into a
-    # crossJoin (n × IVF_CELLS rows), JVM-side sequential-fold dot product
-    # (matches the oracle's list_dot_product), rounded to 6 dp so ranking
-    # ties break portably on cell id.
-    sims = (
-        _norm_vectors_of(vectors)
-        .crossJoin(F.broadcast(cdf))
-        .select(
-            "vec_id",
-            "cell",
-            F.round(dot(F.col("e"), F.col("cvec")) / F.col("nrm"), 6).alias("sim"),
-        )
-    )
-    wc = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cell"))
-    ranked = (
-        sims.withColumn("rnk", F.row_number().over(wc))
-        .where(F.col("rnk") <= IVF_NPROBE)
-        # Both sides of the probe⋈assign self-join read this — materialize
-        # once so the ranking stage doesn't run twice (same guard as
-        # connected_components' lineage cut).
-        .localCheckpoint()
-    )
+    nv = _norm_vectors_of(table(spark, sf_dir, "embeddings"))
+    # Both sides of the probe⋈assign self-join read the ranking —
+    # materialize once so the ranking stage doesn't run twice (same guard
+    # as connected_components' lineage cut).
+    ranked = cell_ranks(nv, IVF_NPROBE).select("vec_id", "cell", "rnk").localCheckpoint()
     assign = ranked.where(F.col("rnk") == 1).select(
         F.col("vec_id").alias("neighbor_id"), "cell"
     )
@@ -1083,14 +1007,8 @@ def ann_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = _exact_cosine_rerank(
-        table(spark, sf_dir, "embeddings").select("vec_id", "embedding"), cand
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") == 1)
-        .select("query_id", "neighbor_id", "cosine")
+    return cosine_topk(_exact_cosine_rerank(nv, cand), 1).select(
+        "query_id", "neighbor_id", "cosine"
     )
 
 
@@ -1106,21 +1024,9 @@ def _oracle_semdedup() -> str:
     assignment as the IVF oracle (6-dp rounded cosine, cell-id tiebreak),
     within-cell unordered pairs at 4-dp rounding, drop rule and keeper
     choice replicated exactly."""
-    from wheels_in_motion_analytics_spark.functions.ivf_artifact import (
-        IVF_FROZEN_CENTROIDS,
-    )
-
-    cent_values = ",\n    ".join(
-        f"({c}, [{', '.join(repr(float(v)) for v in row)}])"
-        for c, row in enumerate(IVF_FROZEN_CENTROIDS)
-    )
     return f"""
 WITH {_ORACLE_NORM},
-cents (cell, cvec) AS (
-  SELECT * FROM (VALUES
-    {cent_values}
-  ) AS t(cell, cvec)
-),
+{_oracle_cents()},
 sims AS (
   SELECT vec_id, cell,
          ROUND(list_dot_product(e, cvec) / nrm, 6) AS sim
@@ -1168,51 +1074,24 @@ FROM dropped d JOIN dup_edges e
     oracle=_oracle_semdedup(),
 )
 def semdedup_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from wheels_in_motion_analytics_spark.functions.ivf_artifact import (
-        IVF_FROZEN_CENTROIDS,
-    )
-
-    vectors = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    nv = _norm_vectors_of(vectors).localCheckpoint()
-    cdf = spark.createDataFrame(
-        [(c, [float(v) for v in row]) for c, row in enumerate(IVF_FROZEN_CENTROIDS)],
-        "cell INT, cvec ARRAY<DOUBLE>",
-    )
-    sims = nv.crossJoin(F.broadcast(cdf)).select(
-        "vec_id",
-        "cell",
-        F.round(dot(F.col("e"), F.col("cvec")) / F.col("nrm"), 6).alias("sim"),
-    )
-    wc = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cell"))
-    assign = (
-        sims.withColumn("rnk", F.row_number().over(wc))
-        .where(F.col("rnk") == 1)
-        .select("vec_id", "cell")
-        .localCheckpoint()
-    )
+    nv = _norm_vectors_of(table(spark, sf_dir, "embeddings")).localCheckpoint()
+    assign = cell_ranks(nv, 1).select("vec_id", "cell").localCheckpoint()
     # within-cell unordered pairs — the ONLY pair generator, bounded by
     # cell occupancy, then exact cosine via join-back to the norm relation
-    left = assign.select(F.col("vec_id").alias("keeper"), "cell")
-    right = assign.select(F.col("vec_id").alias("cand"), F.col("cell").alias("c2"))
+    left = assign.select(F.col("vec_id").alias("query_id"), "cell")
+    right = assign.select(F.col("vec_id").alias("neighbor_id"), F.col("cell").alias("c2"))
     pairs = left.join(
-        right, (F.col("cell") == F.col("c2")) & (F.col("keeper") < F.col("cand"))
-    ).select("cell", "keeper", "cand")
-    x = nv.select(F.col("vec_id").alias("keeper"), F.col("e").alias("ex"), F.col("nrm").alias("nx"))
-    y = nv.select(F.col("vec_id").alias("cand"), F.col("e").alias("ey"), F.col("nrm").alias("ny"))
+        right, (F.col("cell") == F.col("c2")) & (F.col("query_id") < F.col("neighbor_id"))
+    ).select("cell", "query_id", "neighbor_id")
     dup_edges = (
-        pairs.join(x, "keeper")
-        .join(y, "cand")
+        _exact_cosine_rerank(nv, pairs)
+        .where(F.col("cosine") >= SEMDEDUP_TAU)
         .select(
             "cell",
-            "keeper",
-            F.col("cand").alias("vec_id"),
-            F.round(dot(F.col("ex"), F.col("ey")) / (F.col("nx") * F.col("ny")), 4).alias(
-                "cosine"
-            ),
+            F.col("query_id").alias("keeper"),
+            F.col("neighbor_id").alias("vec_id"),
+            "cosine",
         )
-        .where(F.col("cosine") >= SEMDEDUP_TAU)
         .localCheckpoint()
     )
     dropped = dup_edges.groupBy("cell", "vec_id").agg(F.min("keeper").alias("kept_by"))
@@ -1233,22 +1112,9 @@ def _oracle_kmeans_update() -> str:
     tiebreak), per-dim member sums on the 1e6 integer grid (exact,
     order-independent), centroid shift via exact integer numerators
     squared in HUGEINT (BIGINT would overflow at Σ(~4e9)²)."""
-    from wheels_in_motion_analytics_spark.functions.ivf_artifact import (
-        IVF_FROZEN_CENTROIDS,
-    )
-
-    dim = len(IVF_FROZEN_CENTROIDS[0])
-    cent_values = ",\n    ".join(
-        f"({c}, [{', '.join(repr(float(v)) for v in row)}])"
-        for c, row in enumerate(IVF_FROZEN_CENTROIDS)
-    )
     return f"""
 WITH {_ORACLE_NORM},
-cents (cell, cvec) AS (
-  SELECT * FROM (VALUES
-    {cent_values}
-  ) AS t(cell, cvec)
-),
+{_oracle_cents()},
 sims AS (
   SELECT vec_id, cell,
          ROUND(list_dot_product(e, cvec) / nrm, 6) AS sim
@@ -1267,7 +1133,7 @@ member AS (
 ),
 dims AS (
   SELECT cell, i AS pos, qe[i + 1] AS qv
-  FROM member, unnest(range({dim})) AS t(i)
+  FROM member, unnest(range({ANN_DIM})) AS t(i)
 ),
 per_dim AS (
   SELECT cell, pos,
@@ -1278,7 +1144,7 @@ per_dim AS (
 oldq AS (
   SELECT cell, i AS pos,
          CAST(floor(cvec[i + 1] * 1e6 + 0.5) AS BIGINT) AS old_q
-  FROM cents, unnest(range({dim})) AS t(i)
+  FROM cents, unnest(range({ANN_DIM})) AS t(i)
 )
 SELECT p.cell,
        CAST(MAX(p.n) AS BIGINT) AS n_members,
@@ -1310,41 +1176,15 @@ GROUP BY p.cell
     oracle=_oracle_kmeans_update(),
 )
 def kmeans_lloyd_update(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from wheels_in_motion_analytics_spark.functions.ivf_artifact import (
-        IVF_FROZEN_CENTROIDS,
-    )
-
-    vectors = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cdf = spark.createDataFrame(
-        [(c, [float(v) for v in row]) for c, row in enumerate(IVF_FROZEN_CENTROIDS)],
-        "cell INT, cvec ARRAY<DOUBLE>",
-    )
-    normed = _norm_vectors_of(vectors)
-    sims = normed.crossJoin(F.broadcast(cdf)).select(
-        "vec_id",
-        "e",
-        "cell",
-        F.round(dot(F.col("e"), F.col("cvec")) / F.col("nrm"), 6).alias("sim"),
-    )
-    wc = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cell"))
-    member = (
-        sims.withColumn("rnk", F.row_number().over(wc))
-        .where(F.col("rnk") == 1)
-        .select(
-            "cell",
-            F.transform(
-                F.col("e"), lambda x: F.floor(x * 1e6 + F.lit(0.5)).cast("bigint")
-            ).alias("qe"),
-        )
-    )
+    nv = _norm_vectors_of(table(spark, sf_dir, "embeddings"))
+    qe = F.transform(F.col("e"), lambda x: F.floor(x * 1e6 + F.lit(0.5)).cast("bigint"))
+    member = cell_ranks(nv, 1).select("cell", qe.alias("qe"))
     per_dim = (
         member.select("cell", F.posexplode("qe").alias("pos", "qv"))
         .groupBy("cell", "pos")
         .agg(F.sum("qv").alias("s"), F.count(F.lit(1)).alias("n"))
     )
-    oldq = cdf.select(
+    oldq = _centroid_df(spark).select(
         "cell", F.posexplode("cvec").alias("pos", "ov")
     ).select(
         "cell", "pos", F.floor(F.col("ov") * 1e6 + F.lit(0.5)).cast("bigint").alias("old_q")
@@ -1946,21 +1786,11 @@ MP_QUERY_MOD = 53  # queries = vec_id % 53 == 0 — a bounded ~2% slice
 
 
 def _oracle_multiprobe() -> str:
-    planes = _hyperplanes(MP_TABLES * MP_BITS)
-    per_table = []
-    for t in range(MP_TABLES):
-        bits = " + ".join(
-            f"(CASE WHEN list_dot_product(e, [{', '.join(repr(v) for v in planes[t * MP_BITS + i])}]) >= 0 "
-            f"THEN {1 << i} ELSE 0 END)"
-            for i in range(MP_BITS)
-        )
-        per_table.append(f"SELECT vec_id, {t} AS tbl, ({bits}) AS bucket FROM nn")
-    sig_sql = "\n  UNION ALL ".join(per_table)
     flips = ", ".join(str(f) for f in [0] + [1 << j for j in range(MP_BITS)])
     return f"""
 WITH {_ORACLE_NORM},
 sig AS MATERIALIZED (
-  {sig_sql}
+  {_oracle_hyperplane_buckets(MP_TABLES, MP_BITS)}
 ),
 probes AS (
   SELECT vec_id, tbl, xor(bucket, CAST(f AS BIGINT)) AS bucket
@@ -2003,46 +1833,9 @@ SELECT query_id, neighbor_id, cosine FROM (
     oracle=_oracle_multiprobe(),
 )
 def ann_multiprobe_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyspark.sql.types as T
-    from pyspark.sql import Window
-
-    nv = _norm_vectors(spark, sf_dir).localCheckpoint()
-    planes = _hyperplanes(MP_TABLES * MP_BITS)
-
-    def signatures(batches):
-        import numpy as np
-        import pandas as pd
-
-        pm = np.array(planes, dtype="float64")
-        weights = np.array([1 << i for i in range(MP_BITS)], dtype="int64")
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            q = np.stack(pdf["e"].to_numpy()).astype("float64")
-            sgn = (q @ pm.T >= 0).astype("int64").reshape(
-                len(q), MP_TABLES, MP_BITS
-            )
-            buckets = (sgn * weights).sum(axis=2)
-            n = len(q)
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), MP_TABLES),
-                    "tbl": np.tile(np.arange(MP_TABLES), n),
-                    "bucket": buckets.reshape(-1),
-                }
-            )
-
-    sig_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("tbl", T.IntegerType()),
-            T.StructField("bucket", T.LongType()),
-        ]
-    )
-    sig = (
-        nv.select("vec_id", "e").mapInPandas(signatures, sig_schema)
-        .localCheckpoint()  # probed AND joined against — one matmul pass
-    )
+    nv = _norm_vectors_of(table(spark, sf_dir, "embeddings")).localCheckpoint()
+    # probed AND joined against — one matmul pass
+    sig = hyperplane_buckets(nv, MP_TABLES, MP_BITS).localCheckpoint()
     flips = [0] + [1 << j for j in range(MP_BITS)]
     probes = (
         sig.where(F.col("vec_id") % MP_QUERY_MOD == 0)
@@ -2067,23 +1860,7 @@ def ann_multiprobe_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
         .distinct()
     )
-    x = nv.select(F.col("vec_id").alias("query_id"), F.col("e").alias("ex"), F.col("nrm").alias("nx"))
-    y = nv.select(F.col("vec_id").alias("neighbor_id"), F.col("e").alias("ey"), F.col("nrm").alias("ny"))
-    scored = (
-        cand.join(x, "query_id")
-        .join(y, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(dot(F.col("ex"), F.col("ey")) / (F.col("nx") * F.col("ny")), 4).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= MP_TOPK)
-        .drop("rn")
-    )
+    return cosine_topk(_exact_cosine_rerank(nv, cand), MP_TOPK).drop("rnk")
 
 
 # ---------------------------------------------------------------------------
@@ -2138,19 +1915,11 @@ FROM m
     oracle=None,  # assembled below (plane literals)
 )
 def ann_recall_at_k_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     vectors = (
         table(spark, sf_dir, "embeddings").select("vec_id", "embedding").localCheckpoint()
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    exact = (
-        _blocked_pair_scores(vectors, mode="topk", topk=1)
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") == 1)
-        .select("query_id", "neighbor_id")
+    exact = cosine_topk(_blocked_pair_scores(vectors, mode="topk", topk=1), 1).select(
+        "query_id", "neighbor_id"
     )
     lsh = lsh_topk(vectors).select(
         F.col("query_id").alias("l_query"), F.col("neighbor_id").alias("l_neighbor")
@@ -2186,21 +1955,9 @@ REGISTRY["ann_recall_at_k_eval"].oracle = _recall_eval_oracle()
 
 
 def _silhouette_oracle() -> str:
-    from wheels_in_motion_analytics_spark.functions.ivf_artifact import (
-        IVF_FROZEN_CENTROIDS,
-    )
-
-    cent_values = ",\n    ".join(
-        f"({c}, [{', '.join(repr(float(v)) for v in row)}])"
-        for c, row in enumerate(IVF_FROZEN_CENTROIDS)
-    )
     return f"""
 WITH {_ORACLE_NORM},
-cents (cell, cvec) AS (
-  SELECT * FROM (VALUES
-    {cent_values}
-  ) AS t(cell, cvec)
-),
+{_oracle_cents()},
 sims AS (
   SELECT vec_id, cell,
          CAST(round(ROUND(list_dot_product(e, cvec) / nrm, 6) * 1000000, 0) AS BIGINT) AS sim_micro
@@ -2247,34 +2004,11 @@ FROM pts GROUP BY cell
     oracle=None,  # assembled below (centroid literals)
 )
 def silhouette_simplified_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from wheels_in_motion_analytics_spark.functions.ivf_artifact import (
-        IVF_FROZEN_CENTROIDS,
-    )
-
-    vectors = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cdf = spark.createDataFrame(
-        [(c, [float(v) for v in row]) for c, row in enumerate(IVF_FROZEN_CENTROIDS)],
-        "cell INT, cvec ARRAY<DOUBLE>",
-    )
-    sims = (
-        _norm_vectors_of(vectors)
-        .crossJoin(F.broadcast(cdf))
-        .select(
-            "vec_id",
-            "cell",
-            F.round(
-                F.round(dot(F.col("e"), F.col("cvec")) / F.col("nrm"), 6) * 1000000, 0
-            )
-            .cast("bigint")
-            .alias("sim_micro"),
-        )
-    )
-    wc = Window.partitionBy("vec_id").orderBy(F.desc("sim_micro"), F.asc("cell"))
+    # sim is already on the 6-dp grid, so its micro-unit image ranks the same
+    sim_micro = F.round(F.col("sim") * 1000000, 0).cast("bigint")
     ranked = (
-        sims.withColumn("rnk", F.row_number().over(wc))
-        .where(F.col("rnk") <= 2)
+        cell_ranks(_norm_vectors_of(table(spark, sf_dir, "embeddings")), 2)
+        .select("vec_id", "cell", sim_micro.alias("sim_micro"), "rnk")
         .localCheckpoint()  # own-cell and runner-up branches share it
     )
     own = ranked.where(F.col("rnk") == 1).select(
